@@ -165,10 +165,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph-sized relation. Partitioning must track |E|, not |corpus|
     (measured 1.9× on the bench graph, 6.2 s → 3.3 s at sf0.1). Contributions are map-side
     combined by the groupBy, so a hub's fan-in aggregates before the
-    exchange; the rank relation is left unhinted — AQE broadcasts it
-    at test scale, shuffles it at 10⁹ nodes where a node-sized
-    broadcast would OOM. One scalar (m, n) driver read (the
-    connected-components posture, dedup.py:653). Plans stay bounded
+    exchange; the node-sized rank and contribution relations are
+    explicitly broadcast while n <= 10M and left to shuffle on node
+    above that, where a node-sized broadcast would OOM. One scalar
+    node-count driver read (the connected-components posture,
+    dedup.py:653). Plans stay bounded
     because K is a constant: no checkpoint needed at K=5; a
     convergence-driven variant would localCheckpoint per iteration
     exactly like connected_components."""
@@ -187,18 +188,18 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pinned partitioned by DST and materialized eagerly: every
     # iteration's contribution aggregate groups by dst, so once the
     # cache reports hashpartitioning(dst, npart) (isFinalPlan=true —
-    # hence the count() below, which doubles as the m scalar) the
-    # K groupBys all reuse the cached layout and plan ZERO exchanges;
+    # hence the count() below) the K groupBys all reuse the cached
+    # layout and plan ZERO exchanges;
     # the ranks side of each join is broadcast (size-gated below), so
     # the join itself never re-partitions e. r12 pinned by src — every
     # iteration paid a full exchange on dst.
     e = pin(e0.repartition(npart, "dst"))
-    m = e.count()  # materializes the pin; |directed edges|
+    e.count()  # materializes the pin
     # Node set pinned: it feeds the LEFT side of every iteration's
     # rank update — unpinned, each of the K+1 consumers replays the
     # distinct (one shuffle) over the cached edge relation. Its count
-    # is exactly n (bipartite: every node occurs as src) — the (m, n)
-    # scalar probe r12 ran as a separate countDistinct job is gone.
+    # is exactly n (bipartite: every node occurs as src), so no
+    # separate countDistinct job is needed.
     nodes = pin(e.select(F.col("src").alias("node")).distinct())
     n = nodes.count()
     init = _ONE // n
@@ -212,8 +213,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maps (K pointless shuffle writes of the pinned edge relation)
     # before converting at runtime; the hint skips those stages
     # outright. Past the threshold (10⁹-node graphs) the hint is not
-    # applied and the joins shuffle on node, the posture the docstring
-    # describes.
+    # applied and the joins shuffle on node.
     bcast_ranks = n <= 10_000_000
     ranks = nodes.select("node", F.lit(init).alias("rank"))
     for _ in range(_K):

@@ -38,7 +38,7 @@ from mapreduce_wordcounter_spark.functions.numeric import dsum, quantize, sql_ds
 from mapreduce_wordcounter_spark.registry import query
 from mapreduce_wordcounter_spark.session import scratch_dir
 from mapreduce_wordcounter_spark.sources.versioned import VersionedTable
-from mapreduce_wordcounter_spark.tables import load_table
+from mapreduce_wordcounter_spark.tables import load_table, table_rows
 
 _VT_PATHS: dict[tuple[str, str], str] = {}
 
@@ -3215,7 +3215,9 @@ def stream_versioned_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_shuffle_partitions,
     )
 
-    with stream_shuffle_partitions(spark, 2):
+    with stream_shuffle_partitions(
+        spark, table_rows(spark, sf_dir, "documents")
+    ):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -3327,7 +3329,7 @@ def stream_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = "cdfstream_" + _uuid.uuid4().hex[:8]
     ckpt = scratch_dir("cdfstream_ck_")
-    with stream_shuffle_partitions(spark, 2):
+    with stream_shuffle_partitions(spark, vt.count_rows()):
         q = (
             s.writeStream.outputMode("append")
             .format("memory")
@@ -3485,7 +3487,7 @@ def stream_cdf_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         apply_cdf_mv_batch(spark, mv_path, batch, batch_id)
 
     ckpt = scratch_dir("cdf_mv_ck_")
-    with stream_shuffle_partitions(spark, 2):
+    with stream_shuffle_partitions(spark, vt.count_rows()):
         q = (
             s.writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", os.path.join(ckpt, "q"))

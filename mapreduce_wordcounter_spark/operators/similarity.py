@@ -45,27 +45,13 @@ from mapreduce_wordcounter_spark.operators.dedup import _DUCK_MD5H, _SPARK_MD5H
 from mapreduce_wordcounter_spark.registry import ORACLE, query
 from mapreduce_wordcounter_spark.tables import load_table
 
-def _emb(
-    spark: SparkSession, sf_dir: str, spread: bool = False
-) -> DataFrame:
-    """The embeddings scan. r12 spread this to cluster width for every
-    consumer; the driver's c32 bench showed the blanket repartition
-    REGRESSED the join/top-k-dominated consumers (ann_ivf_topk 0.89x,
-    embedding_top_pairs_bucketed +57%) while helping only the
-    scan-CPU-bound paths. ``spread=True`` opts a consumer in to a
-    hash(vec_id), data-bounded spread (tables.spread_narrow_scan) —
-    used exactly where the c32 bench shows the win: the per-vector
-    quantization/projection derivations (_sq8_codes, the JL projection)
-    whose interpreted higher-order-function math is the scan-stage
-    cost (VERDICT r12 #2: spread only where measured)."""
-    df = load_table(spark, sf_dir, "embeddings")
-    if spread:
-        from mapreduce_wordcounter_spark.tables import spread_narrow_scan
-
-        df = spread_narrow_scan(
-            spark, df, sf_dir, "embeddings", key="vec_id", rows_per_task=64
-        )
-    return df
+def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings scan, unspread: a blanket cluster-width
+    repartition REGRESSED the join/top-k-dominated consumers
+    (ann_ivf_topk 0.89x, embedding_top_pairs_bucketed +57% at c32), so
+    only a consumer measured to gain spreads its own scan
+    (tables.spread_narrow_scan)."""
+    return load_table(spark, sf_dir, "embeddings")
 
 N_QUERIES = 5  # vec_id < 5 are the benchmark query vectors
 TOP_K = 10
@@ -353,10 +339,8 @@ _DUCK_LONG = """
 """
 
 
-def _spark_long(
-    spark: SparkSession, sf_dir: str, spread: bool = False
-) -> DataFrame:
-    emb = _emb(spark, sf_dir, spread=spread)
+def _spark_long(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _emb(spark, sf_dir)
     return emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos", "xf")
     ).select("vec_id", "label", "pos", F.col("xf").cast("double").alias("x"))
@@ -2022,10 +2006,9 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Spread before the Arrow stage: the NumPy partial-sum work is
     # scan-stage CPU and otherwise runs on the file's split count
-    # (single task locally; no-op at scale). Built from the raw scan —
-    # NOT _emb(), whose own spread would stack a second back-to-back
-    # exchange here (ADVICE r12) — and projected to the one column the
-    # Arrow stage reads before the exchange (guide §2.3/§4.1).
+    # (single task locally; no-op at scale). Projected to the one
+    # column the Arrow stage reads before the exchange (guide
+    # §2.3/§4.1).
     e = spread_narrow_scan(
         spark,
         load_table(spark, sf_dir, "embeddings").select("embedding"),

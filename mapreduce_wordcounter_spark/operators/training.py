@@ -68,7 +68,7 @@ from mapreduce_wordcounter_spark.functions.numeric import dsum, quantize, sql_ds
 from mapreduce_wordcounter_spark.operators.dedup import _DUCK_MD5H, _SPARK_MD5H
 from mapreduce_wordcounter_spark.operators.text import _SQL_TOKS, _toks_col
 from mapreduce_wordcounter_spark.registry import query
-from mapreduce_wordcounter_spark.tables import load_table
+from mapreduce_wordcounter_spark.tables import load_table, table_rows
 
 _K = 5  # gradient-descent steps
 _LR = 12.0  # learning rate (fast-sigmoid gradients are ~4x flatter)
@@ -578,7 +578,7 @@ def stream_lr_keep_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"), F.sum("kept").alias("n_kept")
     )
     name = "stream_lr_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")

@@ -628,23 +628,25 @@ def stream_pyds_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Connector cost trail (r5 -> r7, sf-independent 200-doc stream):
     5.6 s with the row-tuple simple reader at 32 state partitions ->
-    ~3.0 s via Arrow RecordBatch reads, state partitions sized to the
-    20-word vocabulary (2), a tmpfs WAL, one read task per batch, and
-    a job-free progress-based drain -> ~2.2 s by halving the
-    micro-batch count (batch_docs 50 -> 100: the residue was 4 x
-    ~0.55 s trigger cycles of pure micro-batch machinery, so fewer,
-    larger Arrow batches is the correct lever — the multi-batch
-    offset-log path stays exercised with two batches here and by the
-    offset-replay/exactly-once tests on the simple reader)."""
+    ~3.0 s via Arrow RecordBatch reads, fewer state partitions, one
+    read task per batch, and a job-free progress-based drain -> ~2.2 s
+    by halving the micro-batch count (batch_docs 50 -> 100: the
+    residue was 4 x ~0.55 s trigger cycles of pure micro-batch
+    machinery, so fewer, larger Arrow batches is the correct lever —
+    the multi-batch offset-log path stays exercised with two batches
+    here and by the offset-replay/exactly-once tests on the simple
+    reader). The state width follows the 200 streamed docs
+    (stream_shuffle_partitions): one partition."""
     import time
     import uuid
 
     from mapreduce_wordcounter_spark.sources.pydatasource import register
 
     register(spark)  # idempotent (session-local flag)
+    n_docs = 200
     docs = (
         spark.readStream.format("synthetic_corpus_arrow")
-        .option("n_docs", 200)
+        .option("n_docs", n_docs)
         .option("batch_docs", 100)
         .option("words_per_doc", 20)
         # one read task per 100-doc micro-batch: scheduling a second
@@ -665,19 +667,8 @@ def stream_pyds_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_shuffle_partitions,
     )
 
-    # Offset/commit WAL on tmpfs when available: the per-batch
-    # walCommit+commitOffsets fsyncs (~100 ms/batch to /tmp disk) are
-    # pure harness overhead for this bounded demo stream — a
-    # production job owns a durable checkpoint dir instead.
     ckpt = scratch_dir("pyds_stream_ck_")
-
-    # stream_shuffle_partitions(2): the stateful aggregate's partition
-    # count tracks STATE size (a 20-word vocabulary), not the batch
-    # session's 32 — each extra partition is a near-empty state store
-    # opened+committed per micro-batch (the dominant cost of this
-    # whole 200-doc query, not the connector rows; 32 -> 8 -> 2
-    # measured 5.2 -> 3.6 -> 3.1 s).
-    with stream_shuffle_partitions(spark, 2):
+    with stream_shuffle_partitions(spark, n_docs):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -690,18 +681,18 @@ def stream_pyds_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Drain on the query's own progress events (no Spark job
             # per poll — the old per-poll aggregate both cost a job
             # and raced the next batch for scheduler slots): done when
-            # committed batches account for all 200 source docs.
+            # committed batches account for all n_docs source docs.
             deadline = time.monotonic() + 120
             got = 0
             while time.monotonic() < deadline:
                 got = sum(
                     p["sources"][0]["numInputRows"] for p in q.recentProgress
                 )
-                if got >= 200:
+                if got >= n_docs:
                     break
                 time.sleep(0.02)
             else:
-                raise TimeoutError(f"stream drained only {got}/200 docs")
+                raise TimeoutError(f"stream drained only {got}/{n_docs} docs")
         finally:
             q.stop()
     return spark.table(name)

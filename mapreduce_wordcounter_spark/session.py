@@ -131,17 +131,13 @@ def release_pinned() -> int:
 _SCRATCH_DIRS: list[str] = []
 
 
-def scratch_dir(prefix: str = "mrwc_", base: str | None = None) -> str:
+def scratch_dir(prefix: str = "mrwc_") -> str:
     """Process-scoped scratch directory for operators that need a
     filesystem target (bucketed-table snapshots, foreachBatch sinks and
     their checkpoints). Every directory is registered for atexit
     removal, so repeated harness/bench invocations don't accumulate
-    orphaned temp state. ``base`` overrides the tempdir root (e.g.
-    /dev/shm for throwaway streaming WALs); a missing base falls back
-    to the default tempdir."""
-    if base is not None and not os.path.isdir(base):
-        base = None
-    d = tempfile.mkdtemp(prefix=prefix, dir=base)
+    orphaned temp state."""
+    d = tempfile.mkdtemp(prefix=prefix)
     _SCRATCH_DIRS.append(d)
     return d
 

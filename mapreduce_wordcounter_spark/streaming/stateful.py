@@ -30,6 +30,7 @@ from mapreduce_wordcounter_spark.streaming.windows import (
     events_stream,
     stream_shuffle_partitions,
 )
+from mapreduce_wordcounter_spark.tables import table_rows
 
 _OUT_SCHEMA = "user_id bigint, n_events bigint"
 _STATE_SCHEMA = "n bigint"
@@ -82,7 +83,7 @@ def stream_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (multi-batch state progression is pinned in tests/test_streaming.py)."""
     out = user_running_counts(events_stream(spark, sf_dir))
     name = "stream_stateful_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
         q = (
             out.writeStream.outputMode("update")
             .format("memory")
@@ -183,7 +184,7 @@ def stream_tws_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "stream_tws_" + uuid.uuid4().hex[:8]
     try:
         out = user_profile_tws(events_stream(spark, sf_dir))
-        with stream_shuffle_partitions(spark):
+        with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
             q = (
                 out.writeStream.outputMode("update")
                 .format("memory")
@@ -293,7 +294,7 @@ def stream_apws_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     active key per micro-batch (update mode)."""
     out = user_profile_apws(events_stream(spark, sf_dir))
     name = "stream_apws_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
         q = (
             out.writeStream.outputMode("update")
             .format("memory")
@@ -368,7 +369,7 @@ def stream_stateful_max_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     that makes the change stream cheap to sink."""
     out = user_max_cdc(events_stream(spark, sf_dir))
     name = "stream_maxcdc_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
         q = (
             out.writeStream.outputMode("update")
             .format("memory")

@@ -32,47 +32,47 @@ from pyspark.sql import types as T
 from mapreduce_wordcounter_spark.functions.numeric import dsum, sql_dsum
 from mapreduce_wordcounter_spark.registry import query
 from mapreduce_wordcounter_spark.session import ensure_utc
-from mapreduce_wordcounter_spark.tables import load_table
+from mapreduce_wordcounter_spark.tables import load_table, table_rows, task_width
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
 _DFMT = "%Y-%m-%d %H:%M:%S"
 
-# Streaming state partition count, decoupled from the batch session's
-# spark.sql.shuffle.partitions: each stateful-operator partition owns a
-# state store instance whose open/commit cost is per-partition fixed
-# overhead, so the right number tracks STATE size (keys retained), not
-# batch scan width. Here state is tiny (hour-buckets x event types /
-# distinct users), so a handful of stores beats 32-200 near-empty ones
-# — measured 2x on the drained queries. A production stream sizes this
-# to its own key cardinality at first start (the checkpoint locks it).
-STREAM_STATE_PARTITIONS = 8
+# Rows of streamed input per stateful-operator partition. Each state
+# partition is a state store opened and committed every micro-batch,
+# a fixed cost however few rows it holds (0.3-0.5 CPU s per partition
+# for the Python-worker stateful operators on 4 cores), so a drain's
+# partition count follows the rows it reads: task_width(rows, 12_500).
+# 12_500 is the old fixed width of 8 over the 100k events at sf0.1, so
+# that drain keeps its width on 8+ cores while a 10k-row drain runs one
+# partition. A production stream sizes this at first start; the
+# checkpoint then locks it.
+ROWS_PER_STATE_TASK = 12_500
 
 
 @contextmanager
-def stream_shuffle_partitions(spark: SparkSession, n: int = STREAM_STATE_PARTITIONS):
-    """Scope spark.sql.shuffle.partitions to a streaming drain; each
-    drain starts a fresh query + checkpoint, so the partition count is
-    free to differ from the batch default and is restored after.
+def stream_shuffle_partitions(spark: SparkSession, rows: int):
+    """Scope spark.sql.shuffle.partitions to a streaming drain over
+    ``rows`` input rows (width: ROWS_PER_STATE_TASK above); each drain
+    starts a fresh query + checkpoint, so the partition count is free
+    to differ from the batch default and is restored after.
 
     Also scopes the DEFAULT checkpoint base to session scratch so the
-    throwaway availableNow WALs are cleaned at exit. (r12 pointed this
-    at /dev/shm as a RAM-backed I/O cut; r13 measured the flagship
-    drain A/B at c32/sf0.1, min-of-3, twice: shm 1.55-1.72 s vs disk
-    1.52-1.56 s — flat, the drain checkpoints are a handful of KB the
-    page cache absorbs — so per VERDICT r12 #7 the redirect is
-    reverted rather than carried unproven.)"""
+    throwaway availableNow WALs are cleaned at exit. They stay on disk:
+    a drain's checkpoint is a few KB the page cache absorbs, and a
+    /dev/shm WAL measured flat against it."""
     from mapreduce_wordcounter_spark.session import scratch_dir
 
+    width = task_width(spark, rows, ROWS_PER_STATE_TASK)
     prior = spark.conf.get("spark.sql.shuffle.partitions")
     prior_ckpt = spark.conf.get(
         "spark.sql.streaming.checkpointLocation", None
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    spark.conf.set(
-        "spark.sql.streaming.checkpointLocation",
-        scratch_dir("drain_ck_"),
-    )
     try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        spark.conf.set(
+            "spark.sql.streaming.checkpointLocation",
+            scratch_dir("drain_ck_"),
+        )
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior)
@@ -240,8 +240,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP(NANOS) (read as int64, converted with integer µs
     arithmetic) and as TIMESTAMP(MICROS) NTZ (cast to session-tz
     TIMESTAMP — sessions pin UTC so the instant is unchanged). A
-    readStream needs its schema up front, so sniff the footer with a
-    batch read (metadata only, no job)."""
+    readStream needs its schema up front, so sniff it with a batch
+    read; parquet schema inference reads the footer in a Spark job, so
+    each call runs one small job."""
     ensure_utc(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
@@ -285,7 +286,7 @@ def stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_tumbling_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -341,7 +342,7 @@ def stream_ohlc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_ohlc_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -387,7 +388,7 @@ def stream_sliding_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_sliding_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -448,7 +449,7 @@ def stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_session_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -525,7 +526,7 @@ def stream_click_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     name = "stream_cj_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
         q = (
             joined.writeStream.outputMode("append")
             .format("memory")
@@ -627,7 +628,7 @@ def stream_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFram
         ),
     )
     name = "stream_oj_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
         q = (
             joined.writeStream.outputMode("append")
             .format("memory")
@@ -643,10 +644,16 @@ def stream_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 def foreach_batch_upsert(
-    spark: SparkSession, agg: DataFrame, target_dir: str, key_cols: list[str] | None = None
+    spark: SparkSession,
+    agg: DataFrame,
+    target_dir: str,
+    rows: int,
+    key_cols: list[str] | None = None,
 ) -> DataFrame:
     """Drain an update-mode streaming aggregate through ``foreachBatch``
     into a parquet upsert target, and return the target's latest state.
+    ``rows`` is the size of the streamed input (it sets the state
+    width, see stream_shuffle_partitions).
 
     The canonical custom-sink pattern for sinks with no native streaming
     writer (JDBC, key-value stores, MERGE targets): update mode emits
@@ -668,7 +675,7 @@ def foreach_batch_upsert(
             .parquet(target_dir)
         )
 
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, rows):
         q = (
             agg.writeStream.outputMode("update")
             .foreachBatch(write_batch)
@@ -729,7 +736,9 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     target = scratch_dir("fbu_") + "/target"
-    return foreach_batch_upsert(spark, agg, target)
+    return foreach_batch_upsert(
+        spark, agg, target, table_rows(spark, sf_dir, "events")
+    )
 
 
 DOCUMENTS_SCHEMA = T.StructType(
@@ -788,7 +797,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "content_hash")
     )
     name = "stream_incr_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
         q = (
             new_docs.writeStream.outputMode("append")
             .format("memory")
@@ -837,7 +846,7 @@ def stream_wc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
     )
     name = "stream_wc_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
         q = (
             counts.writeStream.outputMode("complete")
             .format("memory")
@@ -910,7 +919,7 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("bucket_count"))
     )
     name = "stream_cms_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
         q = (
             sk_stream.writeStream.outputMode("complete")
             .format("memory")
@@ -1011,7 +1020,7 @@ def stream_pii_redacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(redacted).cast("long").alias("len_after"),
     )
     name = "stream_pii_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
         q = (
             stats.writeStream.outputMode("append")
             .format("memory")
@@ -1101,7 +1110,7 @@ def stream_quality_score_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out.write.mode("append").parquet(target)
 
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
         q = (
             docs.writeStream.foreachBatch(score_batch)
             .option("checkpointLocation", target + "_ckpt")
@@ -1176,7 +1185,7 @@ def stream_dsir_lang_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_dsir_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -1270,7 +1279,7 @@ def stream_distinct_users_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_distinct_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -1322,7 +1331,7 @@ def stream_first_touch_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_ftouch_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark):
+    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")

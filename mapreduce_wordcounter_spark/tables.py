@@ -97,6 +97,15 @@ def _dataset_bytes(path: str) -> int | None:
         return None
 
 
+def task_width(spark: SparkSession, rows: int, rows_per_task: int) -> int:
+    """The engine's data-derived width: one task per ``rows_per_task``
+    rows, ``clamp(ceil(rows / rows_per_task), 1, defaultParallelism)``.
+    Never more tasks than cores (the reference's maxWorkers = NumCPU,
+    main.go:31), and never a task whose fixed cost outweighs its rows."""
+    p = spark.sparkContext.defaultParallelism
+    return max(1, min(p, -(-rows // rows_per_task)))
+
+
 def spread_narrow_scan(
     spark: SparkSession,
     df: DataFrame,
@@ -145,8 +154,7 @@ def spread_narrow_scan(
         return df
     width = p
     if rows_per_task:
-        rows = table_rows(spark, sf_dir, name)
-        width = max(1, min(p, -(-rows // rows_per_task)))
+        width = task_width(spark, table_rows(spark, sf_dir, name), rows_per_task)
     if width <= 1:
         return df
     if key is not None:

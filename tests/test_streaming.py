@@ -158,6 +158,102 @@ def test_stream_stateful_equals_batch(spark):
 
 
 # ---------------------------------------------------------------------------
+# State width: derived from the streamed rows, never from the result
+# ---------------------------------------------------------------------------
+
+
+def test_state_width_follows_input_rows(spark):
+    """One state partition up to ROWS_PER_STATE_TASK rows, then one more
+    per ROWS_PER_STATE_TASK, never fewer for more rows, never more than
+    the cores."""
+    from mapreduce_wordcounter_spark.streaming.windows import ROWS_PER_STATE_TASK
+    from mapreduce_wordcounter_spark.tables import task_width
+
+    p = spark.sparkContext.defaultParallelism
+
+    def width(rows):
+        return task_width(spark, rows, ROWS_PER_STATE_TASK)
+
+    assert [width(r) for r in (0, 1, ROWS_PER_STATE_TASK)] == [1, 1, 1]
+    assert width(ROWS_PER_STATE_TASK + 1) == min(2, p)
+    rows = range(0, (p + 2) * ROWS_PER_STATE_TASK, 997)
+    widths = [width(r) for r in rows]
+    assert widths == sorted(widths)
+    assert widths[-1] == p
+    assert width(10**12) == p
+
+
+@pytest.mark.parametrize("prior_ckpt", [None, "ckpt_base"])
+def test_stream_shuffle_partitions_restores_conf(spark, tmp_path, prior_ckpt):
+    """The drain scope sets the state width and a scratch checkpoint
+    base, and puts both confs back on exit, also when the body raises."""
+    from mapreduce_wordcounter_spark.streaming.windows import (
+        stream_shuffle_partitions,
+    )
+
+    sp, ck = "spark.sql.shuffle.partitions", "spark.sql.streaming.checkpointLocation"
+    if prior_ckpt is not None:
+        prior_ckpt = str(tmp_path / prior_ckpt)
+        spark.conf.set(ck, prior_ckpt)
+    prior_sp = spark.conf.get(sp)
+    p = spark.sparkContext.defaultParallelism
+    try:
+        with stream_shuffle_partitions(spark, 1):
+            assert spark.conf.get(sp) == "1"
+            assert spark.conf.get(ck, None) not in (None, prior_ckpt)
+        assert spark.conf.get(sp) == prior_sp
+        assert spark.conf.get(ck, None) == prior_ckpt
+
+        with pytest.raises(RuntimeError, match="drain failed"):
+            with stream_shuffle_partitions(spark, 10**12):
+                assert spark.conf.get(sp) == str(p)
+                raise RuntimeError("drain failed")
+        assert spark.conf.get(sp) == prior_sp
+        assert spark.conf.get(ck, None) == prior_ckpt
+    finally:
+        spark.conf.unset(ck)
+
+
+def test_stateful_result_independent_of_state_width(spark):
+    """The same stateful drain at one state partition and at one per
+    core: both equal the batch GROUP BY, so the width policy can only
+    move cost, never the result."""
+    from mapreduce_wordcounter_spark.streaming.windows import (
+        stream_shuffle_partitions,
+    )
+
+    batch = (
+        spark.read.parquet(f"{SF_ORACLE}/events.parquet")
+        .groupBy("user_id")
+        .agg(F.count("*").alias("n_events"))
+    )
+    p = spark.sparkContext.defaultParallelism
+    for rows, width in ((1, 1), (10**12, p)):
+        name = "t_" + uuid.uuid4().hex[:8]
+        with stream_shuffle_partitions(spark, rows):
+            q = (
+                user_running_counts(events_stream(spark, SF_ORACLE))
+                .writeStream.outputMode("update")
+                .format("memory")
+                .queryName(name)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                q.awaitTermination()
+                state_ops = q.lastProgress["stateOperators"]
+            finally:
+                q.stop()
+        assert [op["numShufflePartitions"] for op in state_ops] == [width]
+        live = (
+            spark.table(name)
+            .groupBy("user_id")
+            .agg(F.max("n_events").alias("n_events"))
+        )
+        assert _canon(live).equals(_canon(batch))
+
+
+# ---------------------------------------------------------------------------
 # Layer 2: multi-batch semantics (watermarks, streaming dedup, state)
 # ---------------------------------------------------------------------------
 
@@ -485,7 +581,7 @@ def test_foreach_batch_upsert_multi_epoch(spark, tmp_path):
         .select(F.date_format("w.start", "HH:mm").alias("ws"), "n", "sum_value")
     )
     target = str(tmp_path / "upsert_target")
-    final = foreach_batch_upsert(spark, agg, target, key_cols=["ws"])
+    final = foreach_batch_upsert(spark, agg, target, 3, key_cols=["ws"])
     got = {r["ws"]: (r["n"], r["sum_value"]) for r in final.collect()}
     assert got == {"10:00": (2, 3.0), "11:00": (1, 4.0)}
     # The raw target must show the upsert history: the 10:00 key was
