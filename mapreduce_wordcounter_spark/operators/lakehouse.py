@@ -12,8 +12,10 @@ property is DuckDB-replayable from the raw parquet. The core lineage:
   v2  merge   UPDATE price*1.1 for matched keys with o_orderkey % 10 = 0;
               INSERT (o_orderkey + 100_000_000, 100.0) for o_orderkey % 100 = 0
 
-The lineage builds once per (session, sf_dir) and lives at rest in a
-scratch directory; every query then reads committed snapshots only —
+Every lineage here is held by ``session.derived``: it builds once per
+(session, sf_dir, lineage name), lives at rest in a scratch directory,
+and is rebuilt if that directory loses its committed versions (see
+``_has_versions``); every query then reads committed snapshots only —
 the same at-rest posture as the trained IVF index and the z-ordered
 table. The reference has no persistence at all (main.go:174-181:
 print and exit); this tier is what replaces its "rerun everything"
@@ -36,11 +38,17 @@ from pyspark.sql import functions as F
 
 from mapreduce_wordcounter_spark.functions.numeric import dsum, quantize, sql_dsum
 from mapreduce_wordcounter_spark.registry import query
-from mapreduce_wordcounter_spark.session import scratch_dir
+from mapreduce_wordcounter_spark.session import derived, scratch_dir
 from mapreduce_wordcounter_spark.sources.versioned import VersionedTable
 from mapreduce_wordcounter_spark.tables import load_table, table_rows
 
-_VT_PATHS: dict[tuple[str, str], str] = {}
+
+def _has_versions(n: int):
+    """`derived` validity check for a lineage held at rest: the table
+    still has at least ``n`` committed versions. A scratch dir removed
+    under a live session, or a build cut short, fails it and rebuilds."""
+    return lambda path: len(VersionedTable(path).versions()) >= n
+
 
 # The deterministic merge source, shared by builder and oracles.
 _SQL_MERGED_V2 = """
@@ -57,11 +65,7 @@ _SQL_MERGED_V2 = """
 def versioned_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """Build (once per session+sf) the 3-version lineage; return the
     table handle. Rebuilds if the at-rest artifact was evicted."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _VT_PATHS.get(key)
-    if path is not None and len(VersionedTable(path, stats_col="o_orderkey").versions()) < 3:
-        path = None  # evicted or partially built -> rebuild
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "orders_v")
         vt = VersionedTable(path, stats_col="o_orderkey")
         o = load_table(spark, sf_dir, "orders").select(
@@ -92,7 +96,9 @@ def versioned_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
             },
             cdc=True,  # write-time change files (table_changes_feed_log)
         )
-        _VT_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "versioned_orders", build, _has_versions(3))
     return VersionedTable(path, stats_col="o_orderkey")
 
 
@@ -185,9 +191,6 @@ def merge_into_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return classified.groupBy("action").agg(
         F.count("*").alias("n"), dsum(F.col("price"), "sum_price")
     )
-
-
-_DELETE_VT_PATHS: dict[tuple[str, str], str] = {}
 
 
 @query(
@@ -482,11 +485,7 @@ def table_symlink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _deleted_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _DELETE_VT_PATHS.get(key)
-    if path is not None and not VersionedTable(path, stats_col="o_orderkey").versions():
-        path = None  # evicted at rest -> rebuild
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_del_"), "orders_v")
         vt = VersionedTable(path, stats_col="o_orderkey")
         o = load_table(spark, sf_dir, "orders").select(
@@ -494,11 +493,10 @@ def _deleted_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
         )
         vt.create(o.repartitionByRange(4, "o_orderkey"))
         vt.delete_where(spark, F.col("o_orderkey") % 13 == 0)
-        _DELETE_VT_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "deleted_orders", build, _has_versions(1))
     return VersionedTable(path, stats_col="o_orderkey")
-
-
-_STREAM_VT_PATHS: dict[tuple[str, str], str] = {}
 
 
 @query(
@@ -559,15 +557,7 @@ def _stream_versioned_orders(spark: SparkSession, sf_dir: str) -> VersionedTable
     """Build (once per session+sf) the streamed-merge lineage: v0 =
     full orders projection; then 4 micro-batch MERGE commits from the
     chunked change stream."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _STREAM_VT_PATHS.get(key)
-    # The dict is only populated after a completed build, so the probe
-    # just detects external eviction of the at-rest artifact. (Version
-    # count is NOT a fixed 5: a hash-empty chunk file yields a rows-less
-    # trigger that commits no snapshot, by design.)
-    if path is not None and not VersionedTable(path, stats_col="o_orderkey").versions():
-        path = None
-    if path is None:
+    def build():
         base_dir = scratch_dir("versioned_stream_")
         path = os.path.join(base_dir, "orders_v")
         vt = VersionedTable(path, stats_col="o_orderkey")
@@ -626,11 +616,14 @@ def _stream_versioned_orders(spark: SparkSession, sf_dir: str) -> VersionedTable
             q.awaitTermination()
         finally:
             q.stop()
-        _STREAM_VT_PATHS[key] = path
+        return path
+
+    # Only a completed build is stored, so `valid` just detects external
+    # eviction. (The version count is NOT a fixed 5: a hash-empty chunk
+    # file yields a rows-less trigger that commits no snapshot, by design.)
+    path = derived(spark, sf_dir, "stream_versioned_orders", build, _has_versions(1))
     return VersionedTable(path, stats_col="o_orderkey")
 
-
-_STREAM_WAP_PATHS: dict[tuple[str, str], str] = {}
 
 _SQL_SWAP_MERGED = """
     SELECT o_orderkey,
@@ -650,11 +643,7 @@ def _stream_wap_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     committing ONE MERGE on branch 'staging'; the audit invariant
     (main untouched through the whole drain) is hard-asserted before
     fast_forward publishes the staged chain."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _STREAM_WAP_PATHS.get(key)
-    if path is not None and not VersionedTable(path).versions():
-        path = None
-    if path is None:
+    def build():
         base_dir = scratch_dir("versioned_swap_")
         path = os.path.join(base_dir, "orders_v")
         vt = VersionedTable(path, stats_col="o_orderkey")
@@ -724,7 +713,9 @@ def _stream_wap_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
                 f"(head v{vt.latest_version()})"
             )
         vt.fast_forward("staging")
-        _STREAM_WAP_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "stream_wap_orders", build, _has_versions(1))
     return VersionedTable(path, stats_col="o_orderkey")
 
 
@@ -775,9 +766,6 @@ def stream_wap_merge_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(agg(vt.read(spark), "main_published"))
         .select("state", "n_rows", "sum_price")
     )
-
-
-_CURATE_VT_PATHS: dict[tuple[str, str], str] = {}
 
 
 def _curate_funnel_oracle() -> str:
@@ -835,11 +823,7 @@ def _curated_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
         quality_score_gopher,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _CURATE_VT_PATHS.get(key)
-    if path is not None and not VersionedTable(path).versions():
-        path = None  # evicted at rest -> rebuild
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_curate_"), "docs_v")
         vt = VersionedTable(path, stats_col="doc_id")
         docs = load_table(spark, sf_dir, "documents")
@@ -870,7 +854,9 @@ def _curated_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
             | F.col("text").rlike(_PII_IPV4)
         ).select("doc_id")
         vt.delete_keys(spark, pii, key="doc_id", source_key="doc_id")
-        _CURATE_VT_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "curated_docs", build, _has_versions(1))
     return VersionedTable(path, stats_col="doc_id")
 
 
@@ -907,18 +893,11 @@ def pipeline_curate_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("version", "n_docs", "total_chars")
 
 
-_MV_VT_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _mv_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """Build (once per session+sf) the 3-version lineage the MV query
     maintains over: create -> DELETE -> MERGE, so the change feeds it
     replays contain all three change types (delete, update, insert)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _MV_VT_PATHS.get(key)
-    if path is not None and len(VersionedTable(path, stats_col="o_orderkey").versions()) < 3:
-        path = None  # evicted or partially built -> rebuild
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_mv_"), "orders_v")
         vt = VersionedTable(path, stats_col="o_orderkey")
         o = load_table(spark, sf_dir, "orders").select(
@@ -945,7 +924,9 @@ def _mv_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
                 "o_totalprice": F.col("new_price"),
             },
         )
-        _MV_VT_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "mv_orders", build, _has_versions(3))
     return VersionedTable(path, stats_col="o_orderkey")
 
 
@@ -1044,9 +1025,6 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MVJ_PATHS: dict[tuple[str, str], tuple[str, str]] = {}
-
-
 def _mvj_tables(
     spark: SparkSession, sf_dir: str
 ) -> tuple[VersionedTable, VersionedTable]:
@@ -1054,17 +1032,11 @@ def _mvj_tables(
     view: orders (o_orderkey, o_custkey, o_totalprice) and customers
     (c_custkey, c_mktsegment), each with v0 = even keys, v1 = odd keys
     appended — so the refresh step sees BOTH sides change at once."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    paths = _MVJ_PATHS.get(key)
-    if paths is not None and (
-        len(VersionedTable(paths[0]).versions()) < 2
-        or len(VersionedTable(paths[1]).versions()) < 2
-    ):
-        paths = None
-    if paths is None:
-        pa = os.path.join(scratch_dir("versioned_"), "mvj_orders")
-        pb = os.path.join(scratch_dir("versioned_"), "mvj_customer")
-        vta, vtb = VersionedTable(pa), VersionedTable(pb)
+    names = ("mvj_orders", "mvj_customer")
+
+    def build():
+        base = scratch_dir("versioned_mvj_")
+        vta, vtb = (VersionedTable(os.path.join(base, n)) for n in names)
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -1075,9 +1047,14 @@ def _mvj_tables(
         vta.append(o.filter("o_orderkey % 2 = 1"))
         vtb.create(c.filter("c_custkey % 2 = 0"))
         vtb.append(c.filter("c_custkey % 2 = 1"))
-        _MVJ_PATHS[key] = (pa, pb)
-        return vta, vtb
-    return VersionedTable(paths[0]), VersionedTable(paths[1])
+        return base
+
+    def valid(base):
+        return all(_has_versions(2)(os.path.join(base, n)) for n in names)
+
+    base = derived(spark, sf_dir, "mvj_tables", build, valid)
+    vta, vtb = (VersionedTable(os.path.join(base, n)) for n in names)
+    return vta, vtb
 
 
 @query(
@@ -1195,7 +1172,6 @@ def table_snapshot_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BLOOM_VT_PATHS: dict[tuple[str, str], str] = {}
 _BLOOM_LOOKUP_KEYS = (7, 731, 1231)  # exist at every test SF
 
 
@@ -1205,18 +1181,16 @@ def _bloom_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     file's [min, max] spans the whole key space, so the range stats
     prune nothing for a point lookup — the regime Bloom filters
     exist for."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _BLOOM_VT_PATHS.get(key)
-    if path is not None and not VersionedTable(path).versions():
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_bloom_"), "orders_b")
         vt = VersionedTable(path, stats_col="o_orderkey", bloom=True)
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         )
         vt.create(o.repartition(8, "o_orderkey"))
-        _BLOOM_VT_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "bloom_orders", build, _has_versions(1))
     return VersionedTable(path, stats_col="o_orderkey", bloom=True)
 
 
@@ -1369,7 +1343,6 @@ def read_skip_multi(
     return vt._scan(spark, snap, files=admitted).filter(pred)
 
 
-_FSKIP_PATHS: dict[tuple[str, str], str] = {}
 _FSKIP_PRICE_SPLIT = 150_000.0  # price boundary between the two commits
 
 
@@ -1380,11 +1353,7 @@ def _fskip_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     on both o_orderkey AND o_totalprice, the layout a two-dimensional
     skip probe actually exercises (versioned_orders' post-merge
     snapshot consolidates to one file — nothing to skip)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _FSKIP_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 2:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "orders_fskip")
         vt = VersionedTable(path)
         o = load_table(spark, sf_dir, "orders").select(
@@ -1401,7 +1370,9 @@ def _fskip_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
                 4, "o_orderkey"
             )
         )
-        _FSKIP_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "fskip_orders", build, _has_versions(2))
     return VersionedTable(path)
 
 
@@ -1447,9 +1418,6 @@ def table_multicol_skip_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PE_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _partition_evolved_events(
     spark: SparkSession, sf_dir: str
 ) -> VersionedTable:
@@ -1459,11 +1427,7 @@ def _partition_evolved_events(
     table. Specs are caller-declared per writer (files carry their own
     directory values, exactly Iceberg's spec-id-per-manifest posture
     in miniature), so no rewrite happens at the switch."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _PE_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 2:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "events_specevo")
         e = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "value"
@@ -1474,7 +1438,9 @@ def _partition_evolved_events(
         VersionedTable(path, partition_by=["hours(ts)"]).append(
             e.filter("event_id % 2 = 1")
         )
-        _PE_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "partition_evolved_events", build, _has_versions(2))
     return VersionedTable(path, partition_by=["hours(ts)"])
 
 
@@ -1519,19 +1485,12 @@ def table_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SR_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _spec_rewrite_events(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """v0 creates half of events under days(ts), v1 appends the other
     half under hours(ts) (spec evolution), v2 is rewrite_spec — the
     targeted OPTIMIZE that migrates ONLY the legacy day-layout files
     into hour directories. Built once per (session, sf)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _SR_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 3:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "events_specrw")
         e = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "value"
@@ -1542,7 +1501,9 @@ def _spec_rewrite_events(spark: SparkSession, sf_dir: str) -> VersionedTable:
         vt = VersionedTable(path, partition_by=["hours(ts)"])
         vt.append(e.filter("event_id % 2 = 1"))
         vt.rewrite_spec(spark)
-        _SR_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "spec_rewrite_events", build, _has_versions(3))
     return VersionedTable(path, partition_by=["hours(ts)"])
 
 
@@ -1631,20 +1592,13 @@ def table_spec_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WAP_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _wap_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """Write-audit-publish lineage: v0 creates orders % 3 = 0 (main),
     v1 stages the % 3 = 1 rows on branch 'audit' (invisible to main —
     pinned in tests/test_versioned.py), then fast_forward publishes
     the audited branch as the new main head. A 'prepublish' tag pins
     v0 for reproducibility."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _WAP_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 2:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "orders_wap")
         vt = VersionedTable(path)
         o = load_table(spark, sf_dir, "orders").select(
@@ -1654,7 +1608,9 @@ def _wap_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
         vt.create_tag("prepublish")
         vt.append(o.filter("o_orderkey % 3 = 1"), branch="audit")
         vt.fast_forward("audit")
-        _WAP_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "wap_orders", build, _has_versions(2))
     return VersionedTable(path)
 
 
@@ -1744,8 +1700,6 @@ def table_refs_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WAPM_PATHS: dict[tuple[str, str], str] = {}
-
 _SQL_WAPM_MERGED = """
     SELECT o_orderkey,
            CASE WHEN o_orderkey % 30 = 0 THEN o_totalprice * 1.2
@@ -1762,11 +1716,7 @@ def _wap_merge_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     a MERGE staged on branch 'audit' updates price*1.2 for keys
     % 30 = 0 and inserts (+200M, 55.0) rows for keys % 60 = 0; then
     fast_forward publishes the audited merge."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _WAPM_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 2:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "orders_wap_merge")
         vt = VersionedTable(path)
         o = load_table(spark, sf_dir, "orders").select(
@@ -1795,7 +1745,9 @@ def _wap_merge_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
             branch="audit",
         )
         vt.fast_forward("audit")
-        _WAPM_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "wap_merge_orders", build, _has_versions(2))
     return VersionedTable(path)
 
 
@@ -1847,18 +1799,11 @@ def table_wap_merge_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RESTORE_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _restore_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """RESTORE lineage: v0 creates orders % 3 = 0, v1 appends the
     'bad batch' (% 3 = 2), v2 = rollback(0) — a NEW commit whose file
     set is exactly v0's, leaving v1 inspectable in history."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _RESTORE_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 3:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "orders_restore")
         vt = VersionedTable(path)
         o = load_table(spark, sf_dir, "orders").select(
@@ -1867,7 +1812,9 @@ def _restore_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
         vt.create(o.filter("o_orderkey % 3 = 0"))
         vt.append(o.filter("o_orderkey % 3 = 2"))
         vt.rollback(0)
-        _RESTORE_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "restore_orders", build, _has_versions(3))
     return VersionedTable(path)
 
 
@@ -1918,19 +1865,12 @@ def table_restore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("state", "operation", "n_rows", "sum_price")
 
 
-_QR_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _quarantine_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """v0 empty create, v1 quarantine-mode expectation
     (o_totalprice <= 400000), v2 append the full orders table — the
     high-price tail (~20% of rows) is routed to the commit's
     quarantine sidecar instead of the data files."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _QR_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 3:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "orders_quarantine")
         vt = VersionedTable(path)
         o = load_table(spark, sf_dir, "orders").select(
@@ -1941,7 +1881,9 @@ def _quarantine_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
             spark, "price_cap", "o_totalprice <= 400000", mode="quarantine"
         )
         vt.append(o)
-        _QR_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "quarantine_orders", build, _has_versions(3))
     return VersionedTable(path)
 
 
@@ -1987,19 +1929,12 @@ def table_quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.unionAll(q).select("status", "n_rows", "sum_price")
 
 
-_ZO_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _zorder_events(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """A versioned events projection rewritten by OPTIMIZE ZORDER
     BY (user_id, day): v0 is 8 arbitrary ingest files (hash order —
     every file's bounds cover ~the full range on both dimensions),
     v1 the Morton-clustered rewrite. Built once per (session, sf)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _ZO_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 2:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "events_zorder")
         vt = VersionedTable(path)
         e = load_table(spark, sf_dir, "events").select(
@@ -2010,7 +1945,9 @@ def _zorder_events(spark: SparkSession, sf_dir: str) -> VersionedTable:
         )
         vt.create(e.repartition(8, "event_id"))  # ingest order: no layout
         vt.optimize(spark, ["user_id", "d"], n_files=8, zorder=True)
-        _ZO_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "zorder_events", build, _has_versions(2))
     return VersionedTable(path)
 
 
@@ -2051,9 +1988,6 @@ def table_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CM_VT_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _column_mapped_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """A 4-version lineage exercising the COLUMN-MAPPING protocol
     (sources/versioned.py: the Delta column-mapping recipe):
@@ -2065,11 +1999,7 @@ def _column_mapped_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
 
     Built once per (session, sf); every query read is then an at-rest
     snapshot read through the per-version mapping."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _CM_VT_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 4:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_cm_"), "orders_cm")
         vt = VersionedTable(path)
         o = load_table(spark, sf_dir, "orders").select(
@@ -2091,7 +2021,9 @@ def _column_mapped_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
             update_set={"price": F.col("np")},
             insert_exprs={"o_orderkey": F.col("s_key"), "price": F.col("np")},
         )
-        _CM_VT_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "column_mapped_orders", build, _has_versions(4))
     return VersionedTable(path)
 
 
@@ -2148,9 +2080,6 @@ def table_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("version", "cols", "n_rows", "sum_val")
 
 
-_MDB_VT_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _merge_delete_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """2-version lineage for the MERGE DELETE branch (Delta's WHEN
     MATCHED ... THEN DELETE):
@@ -2163,11 +2092,7 @@ def _merge_delete_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
                   WHEN NOT MATCHED THEN INSERT
 
     cdc=True so the delete events also land in the write-time feed."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _MDB_VT_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 2:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_mdb_"), "orders_mdb")
         vt = VersionedTable(path, stats_col="o_orderkey")
         o = load_table(spark, sf_dir, "orders").select(
@@ -2192,7 +2117,9 @@ def _merge_delete_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
             delete_when=F.col("o_totalprice") < 1000,
             cdc=True,
         )
-        _MDB_VT_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "merge_delete_orders", build, _has_versions(2))
     return VersionedTable(path, stats_col="o_orderkey")
 
 
@@ -2232,9 +2159,6 @@ def merge_delete_branch_versioned(spark: SparkSession, sf_dir: str) -> DataFrame
 # -- MERGE: full clause matrix (multi-branch WHEN MATCHED / NOT MATCHED
 #    BY SOURCE) ----------------------------------------------------------
 
-_MFM_VT_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _merge_full_matrix_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """2-version lineage for the FULL Delta merge clause matrix:
 
@@ -2248,11 +2172,7 @@ def _merge_full_matrix_orders(spark: SparkSession, sf_dir: str) -> VersionedTabl
           WHEN NOT MATCHED BY SOURCE AND price > 200000 THEN DELETE
           WHEN NOT MATCHED BY SOURCE      THEN UPDATE price + 5.0
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _MFM_VT_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 2:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_mfm_"), "orders_mfm")
         vt = VersionedTable(path, stats_col="o_orderkey")
         o = load_table(spark, sf_dir, "orders").select(
@@ -2287,7 +2207,9 @@ def _merge_full_matrix_orders(spark: SparkSession, sf_dir: str) -> VersionedTabl
             ],
             cdc=True,
         )
-        _MFM_VT_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "merge_full_matrix_orders", build, _has_versions(2))
     return VersionedTable(path, stats_col="o_orderkey")
 
 
@@ -2369,19 +2291,12 @@ def merge_full_cdc_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MSE_VT_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _merge_evolve_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """2-version lineage for MERGE schema evolution (Delta's
     withSchemaEvolution): v0 = (o_orderkey, o_totalprice) for % 9 = 0;
     v1 = merge_full(evolve=True) whose UPDATE and INSERT both target a
     NEW ``tier`` string column."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _MSE_VT_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 2:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_mse_"), "orders_mse")
         vt = VersionedTable(path, stats_col="o_orderkey")
         o = load_table(spark, sf_dir, "orders").select(
@@ -2408,7 +2323,9 @@ def _merge_evolve_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
             }}],
             evolve=True,
         )
-        _MSE_VT_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "merge_evolve_orders", build, _has_versions(2))
     return VersionedTable(path, stats_col="o_orderkey")
 
 
@@ -2445,9 +2362,6 @@ def merge_schema_evolution_versioned(spark: SparkSession, sf_dir: str) -> DataFr
 
 # -- index-catalog staleness under the driver hash ------------------------
 
-_STALE_VT_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _staleness_lineage(spark: SparkSession, sf_dir: str):
     """5-version orders lineage (create %11=0, then append slices
     %11=1..4) with TWO catalog-registered demo indexes over it: one
@@ -2457,11 +2371,7 @@ def _staleness_lineage(spark: SparkSession, sf_dir: str):
     the catalog metadata to real table data."""
     from mapreduce_wordcounter_spark.sources import index_catalog as ic
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _STALE_VT_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 5:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_stale_"), "orders_stale")
         vt = VersionedTable(path, stats_col="o_orderkey")
         o = load_table(spark, sf_dir, "orders").select(
@@ -2480,7 +2390,9 @@ def _staleness_lineage(spark: SparkSession, sf_dir: str):
                 kind, path, None, ic.versioned_fingerprint(bv), data,
                 build_version=bv,
             )
-        _STALE_VT_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "staleness_lineage", build, _has_versions(5))
     return VersionedTable(path, stats_col="o_orderkey")
 
 
@@ -2542,9 +2454,6 @@ def index_staleness_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hive-partitioned versioned tables: partition pruning + DROP PARTITION
 # ---------------------------------------------------------------------------
 
-_PART_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _partitioned_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """Build (once per session+sf) the partitioned-documents lineage:
     v0 create (even doc_ids) + v1 append (odd doc_ids), both written
@@ -2552,18 +2461,16 @@ def _partitioned_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
     the data files (Iceberg identity-partition posture), then v2 DROP
     PARTITION lang='de' — a metadata-only commit (zero bytes
     rewritten; pinned by tests/test_versioned.py)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _PART_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 3:
-        path = None  # evicted or partially built -> rebuild
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "docs_part")
         vt = VersionedTable(path, partition_by=["lang"])
         docs = load_table(spark, sf_dir, "documents")
         vt.create(docs.filter(F.col("doc_id") % 2 == 0))
         vt.append(docs.filter(F.col("doc_id") % 2 == 1))
         vt.delete_partitions(spark, {"lang": ["de"]})
-        _PART_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "partitioned_docs", build, _has_versions(3))
     return VersionedTable(path, partition_by=["lang"])
 
 
@@ -2600,9 +2507,6 @@ def table_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRANSFORM_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _days_partitioned_events(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """Events laid out by the HIDDEN days(ts) partition transform
     (sources/versioned.py _parse_partition_specs — the Iceberg
@@ -2612,11 +2516,8 @@ def _days_partitioned_events(spark: SparkSession, sf_dir: str) -> VersionedTable
     from mapreduce_wordcounter_spark.session import ensure_utc
 
     ensure_utc(spark)  # date rendering must match the oracle's UTC view
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _TRANSFORM_PATHS.get(key)
-    if path is not None and not VersionedTable(path).versions():
-        path = None
-    if path is None:
+
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "events_days")
         vt = VersionedTable(path, partition_by=["days(ts)"])
         vt.create(
@@ -2624,7 +2525,9 @@ def _days_partitioned_events(spark: SparkSession, sf_dir: str) -> VersionedTable
                 "event_id", "ts", "user_id", "event_type", "value"
             )
         )
-        _TRANSFORM_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "days_partitioned_events", build, _has_versions(1))
     return VersionedTable(path, partition_by=["days(ts)"])
 
 
@@ -2676,17 +2579,10 @@ def table_partition_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LPP_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _lang_stats_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """Docs partitioned by lang AND stats-tracked on doc_id, written as
     range-clustered files per partition so both pruning layers bite."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _LPP_PATHS.get(key)
-    if path is not None and not VersionedTable(path).versions():
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "docs_lpp")
         vt = VersionedTable(
             path, stats_col="doc_id", partition_by=["lang"]
@@ -2695,7 +2591,9 @@ def _lang_stats_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
             "doc_id", "lang", "source", "n_chars"
         )
         vt.create(docs.repartitionByRange(4, "doc_id"))
-        _LPP_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "lang_stats_docs", build, _has_versions(1))
     return VersionedTable(path, stats_col="doc_id", partition_by=["lang"])
 
 
@@ -2769,9 +2667,6 @@ def table_partition_delete_versioned(spark: SparkSession, sf_dir: str) -> DataFr
 # Write-time expectations (quality gates on table ingest)
 # ---------------------------------------------------------------------------
 
-_EXP_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _expectations_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """Build (once per session+sf) the gated-ingest lineage: v0 create
     (even doc_ids, pre-expectation seed), v1-v3 register the rules
@@ -2779,11 +2674,7 @@ def _expectations_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
     — fail-mode validated green, drop-mode rows excluded from the
     written files, warn-mode counted only, all metrics observed by the
     write job itself (Observation API, no second scan)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _EXP_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 5:
-        path = None  # evicted or partially built -> rebuild
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "docs_exp")
         vt = VersionedTable(path)
         docs = load_table(spark, sf_dir, "documents")
@@ -2792,7 +2683,9 @@ def _expectations_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
         vt.set_expectation(spark, "min_len", "n_chars >= 300", mode="drop")
         vt.set_expectation(spark, "short_tail", "n_chars <= 500", mode="warn")
         vt.append(docs.filter(F.col("doc_id") % 2 == 1))
-        _EXP_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "expectations_docs", build, _has_versions(5))
     return VersionedTable(path)
 
 
@@ -2845,24 +2738,20 @@ def table_expectations_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shallow clone
 # ---------------------------------------------------------------------------
 
-_CLONE_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _cloned_docs(spark: SparkSession, sf_dir: str):
     """Clone the partitioned-documents table at v1 (zero-copy: one
     manifest referencing the source's files absolutely), then DROP the
     en partition ON THE CLONE — the source must be bit-identical
     after."""
-    key = (spark.sparkContext.applicationId, sf_dir)
     src = _partitioned_docs(spark, sf_dir)
-    path = _CLONE_PATHS.get(key)
-    if path is not None and not VersionedTable(path).versions():
-        path = None
-    if path is None:
+
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "docs_clone")
         cl = src.clone_to(path, version=1)
         cl.delete_partitions(spark, {"lang": ["en"]})
-        _CLONE_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "cloned_docs", build, _has_versions(1))
     return src, VersionedTable(path, partition_by=["lang"])
 
 
@@ -2910,19 +2799,12 @@ def table_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Merge-on-read deletes (deletion vectors)
 # ---------------------------------------------------------------------------
 
-_MOR_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _mor_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """v0 create (orderkey % 3 == 0 slice, range-clustered), v1
     merge-on-read DELETE of orderkey % 7 == 0 — a DV-sidecar-only
     commit whose data file list is bit-identical to v0's (pinned by
     tests/test_versioned.py)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _MOR_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 2:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "orders_mor")
         vt = VersionedTable(path, stats_col="o_orderkey")
         o = load_table(spark, sf_dir, "orders").select(
@@ -2934,7 +2816,9 @@ def _mor_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
             )
         )
         vt.delete_where_mor(spark, F.col("o_orderkey") % 7 == 0)
-        _MOR_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "mor_orders", build, _has_versions(2))
     return VersionedTable(path, stats_col="o_orderkey")
 
 
@@ -2977,9 +2861,6 @@ def table_delete_mor_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming ingest through expectation gates (DLT-style gated pipeline)
 # ---------------------------------------------------------------------------
 
-_GATED_STREAM_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _gated_stream_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """Build (once per session+sf) the gated streaming-ingest lineage:
     an empty-seeded table with drop/warn expectations, then 4
@@ -2987,11 +2868,7 @@ def _gated_stream_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
     the same write-time gate, each commit records its own
     expectation_metrics (violation counts observed by the batch's own
     write job)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _GATED_STREAM_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 3:
-        path = None
-    if path is None:
+    def build():
         base_dir = scratch_dir("versioned_gated_")
         path = os.path.join(base_dir, "docs_v")
         vt = VersionedTable(path)
@@ -3034,7 +2911,9 @@ def _gated_stream_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
             q.awaitTermination()
         finally:
             q.stop()
-        _GATED_STREAM_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "gated_stream_docs", build, _has_versions(3))
     return VersionedTable(path)
 
 
@@ -3081,19 +2960,12 @@ def stream_expectations_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Dynamic partition overwrite
 # ---------------------------------------------------------------------------
 
-_OVW_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _overwrite_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """v0 create (all docs, partitioned by lang), v1 = dynamic
     partition overwrite replacing ONLY the en partition with a
     recomputed backfill (n_chars doubled) — untouched partitions carry
     by reference (pinned by tests)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _OVW_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 2:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "docs_ovw")
         vt = VersionedTable(path, partition_by=["lang"])
         docs = load_table(spark, sf_dir, "documents").select(
@@ -3104,7 +2976,9 @@ def _overwrite_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
             "n_chars", F.col("n_chars") * 2
         )
         vt.overwrite_partitions(spark, backfill)
-        _OVW_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "overwrite_docs", build, _has_versions(2))
     return VersionedTable(path, partition_by=["lang"])
 
 
@@ -3155,9 +3029,6 @@ def table_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Versioned table as a streaming SOURCE
 # ---------------------------------------------------------------------------
 
-_VSTREAM_PATHS: dict[tuple[str, str], str] = {}
-
-
 @query(
     "stream_versioned_source",
     oracle="""
@@ -3187,11 +3058,8 @@ def stream_versioned_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_wordcounter_spark.sources.pydatasource import register
 
     register(spark)  # idempotent (session-local flag)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _VSTREAM_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 3:
-        path = None
-    if path is None:
+
+    def build():
         base_dir = scratch_dir("versioned_src_")
         path = os.path.join(base_dir, "docs_v")
         vt = VersionedTable(path)
@@ -3202,7 +3070,9 @@ def stream_versioned_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         vt.create(docs.filter(third == 0))
         vt.append(docs.filter(third == 1))
         vt.append(docs.filter(third == 2))
-        _VSTREAM_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "stream_versioned_source", build, _has_versions(3))
     s = (
         spark.readStream.format("versioned_stream")
         .option("path", path)
@@ -3510,19 +3380,12 @@ def stream_cdf_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DV maintenance planning
 # ---------------------------------------------------------------------------
 
-_DVM_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _dv_maintenance_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
     """Partitioned docs table with a MoR delete leaving UNEVEN
     per-partition tombstone density: every 5th doc_id everywhere plus
     ALL of lang 'de' — so the decision query has both partitions worth
     compacting and partitions not worth it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _DVM_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 2:
-        path = None
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("versioned_"), "docs_dvm")
         vt = VersionedTable(path, partition_by=["lang"])
         docs = load_table(spark, sf_dir, "documents").select(
@@ -3532,7 +3395,9 @@ def _dv_maintenance_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
         vt.delete_where_mor(
             spark, (F.col("doc_id") % 5 == 0) | (F.col("lang") == "de")
         )
-        _DVM_PATHS[key] = path
+        return path
+
+    path = derived(spark, sf_dir, "dv_maintenance_docs", build, _has_versions(2))
     return VersionedTable(path, partition_by=["lang"])
 
 

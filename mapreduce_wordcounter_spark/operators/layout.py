@@ -36,6 +36,8 @@ ranges to the file writer.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -375,22 +377,23 @@ def layout_span_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Z-order at rest: materialized z-sorted table + pruning probe
 # ---------------------------------------------------------------------------
 
+def _committed(path: str) -> bool:
+    """`derived` validity check for a parquet copy at rest: the write
+    committed (Spark's _SUCCESS marker) and the dir is still there."""
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
 # Session-scoped materialization (the trigram_index_probe /
 # ANN-index-at-rest posture, text.py:2192): build the z-sorted copy
-# once per (session, sf_dir), probe it many times. At 100 TB this is
-# the nightly OPTIMIZE job; here it is a scratch parquet dir cleaned
-# at exit (session.scratch_dir).
-_ZORDER_PATHS: dict[tuple[str, str], str] = {}
-
-
+# once per (session, sf_dir) through session.derived, probe it many
+# times. At 100 TB this is the nightly OPTIMIZE job; here it is a
+# scratch parquet dir cleaned at exit (session.scratch_dir), rebuilt
+# if it is gone or its write never committed (_committed).
 def _zorder_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreduce_wordcounter_spark.session import scratch_dir
+    from mapreduce_wordcounter_spark.session import derived, scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    base = _ZORDER_PATHS.get(key)
-    if base is None:
-        base = scratch_dir("zorder_events_")
-        _ZORDER_PATHS[key] = base
+    def build():
+        path = os.path.join(scratch_dir("zorder_events_"), "events_z")
         e = load_table(spark, sf_dir, "events")
         zed = _zed(spark, sf_dir).select("event_id", "z")
         (
@@ -401,9 +404,13 @@ def _zorder_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             # side of OPTIMIZE ZORDER.
             .repartitionByRange(N_FILES, "z", "event_id")
             .sortWithinPartitions("z", "event_id")
-            .write.parquet(base + "/events_z")
+            .write.parquet(path)
         )
-    return spark.read.parquet(base + "/events_z")
+        return path
+
+    return spark.read.parquet(
+        derived(spark, sf_dir, "zorder_table", build, _committed)
+    )
 
 
 # Probe predicate: a user band x an hour band, both expressed relative
@@ -472,29 +479,27 @@ def zorder_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hive-partitioned at rest + dynamic partition pruning (DPP)
 # ---------------------------------------------------------------------------
 
-_PART_EVENTS_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _events_by_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events materialized hive-partitioned by event_date — the other
     canonical at-rest layout (coarse explicit partitions for pruning
     whole directories; z-order above handles intra-file skipping).
     Built once per (session, sf_dir), scratch-cleaned at exit."""
-    from mapreduce_wordcounter_spark.session import scratch_dir
+    from mapreduce_wordcounter_spark.session import derived, scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    base = _PART_EVENTS_PATHS.get(key)
-    if base is None:
-        base = scratch_dir("events_by_date_")
-        _PART_EVENTS_PATHS[key] = base
+    def build():
+        path = os.path.join(scratch_dir("events_by_date_"), "events_pd")
         e = load_table(spark, sf_dir, "events")
         (
             e.withColumn("event_date", F.to_date("ts"))
             .repartition("event_date")
             .write.partitionBy("event_date")
-            .parquet(base + "/events_pd")
+            .parquet(path)
         )
-    return spark.read.parquet(base + "/events_pd")
+        return path
+
+    return spark.read.parquet(
+        derived(spark, sf_dir, "events_by_date", build, _committed)
+    )
 
 
 # Day-of-week via integer epoch arithmetic (identical in both engines;
@@ -910,9 +915,6 @@ def hilbert_vs_zorder_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Hilbert at rest: materialized d-sorted table + the same slice probe
-_HILBERT_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _hilbert_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hilbert-sorted events copy at rest (the OPTIMIZE write for
     the Hilbert clustering — _zorder_table's posture with the curve
@@ -920,22 +922,23 @@ def _hilbert_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     one contiguous d-range and, because consecutive d is
     grid-adjacent, a connected (user, hour) blob — narrow parquet
     min/max on BOTH dimensions."""
-    from mapreduce_wordcounter_spark.session import scratch_dir
+    from mapreduce_wordcounter_spark.session import derived, scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    base = _HILBERT_PATHS.get(key)
-    if base is None:
-        base = scratch_dir("hilbert_events_")
-        _HILBERT_PATHS[key] = base
+    def build():
+        path = os.path.join(scratch_dir("hilbert_events_"), "events_h")
         e = load_table(spark, sf_dir, "events")
         hil = _hilbed(spark, sf_dir).select("event_id", "hd")
         (
             e.join(hil, "event_id")
             .repartitionByRange(N_FILES, "hd", "event_id")
             .sortWithinPartitions("hd", "event_id")
-            .write.parquet(base + "/events_h")
+            .write.parquet(path)
         )
-    return spark.read.parquet(base + "/events_h")
+        return path
+
+    return spark.read.parquet(
+        derived(spark, sf_dir, "hilbert_table", build, _committed)
+    )
 
 
 @query("hilbert_probe", oracle=ORACLE["zorder_probe"])

@@ -68,6 +68,7 @@ from mapreduce_wordcounter_spark.functions.numeric import dsum, quantize, sql_ds
 from mapreduce_wordcounter_spark.operators.dedup import _DUCK_MD5H, _SPARK_MD5H
 from mapreduce_wordcounter_spark.operators.text import _SQL_TOKS, _toks_col
 from mapreduce_wordcounter_spark.registry import query
+from mapreduce_wordcounter_spark.session import derived
 from mapreduce_wordcounter_spark.tables import load_table, table_rows
 
 _K = 5  # gradient-descent steps
@@ -141,9 +142,6 @@ def _sig(z: F.Column) -> F.Column:
     return F.lit(0.5) * (F.lit(1.0) + z / (F.lit(1.0) + F.abs(z)))
 
 
-_LR_CACHE: dict[tuple, tuple[list[float], float]] = {}
-
-
 def _train(
     spark: SparkSession, sf_dir: str, train_where: str | None = None
 ) -> tuple[list[float], float]:
@@ -154,16 +152,15 @@ def _train(
     Each step is one job: SUM over quantized per-row gradient summands
     (int64, order-independent) + COUNT — five scalars to the driver
     (the bounded-scalar posture of the BPE argmax / graph m,n reads).
-    Cached per (session, sf_dir) so predict/AUC reuse the fit."""
-    key = (spark.sparkContext.applicationId, sf_dir, train_where)
-    cached = _LR_CACHE.get(key)
-    if cached is None:
+    Cached per (session, sf_dir, split) so predict/AUC reuse the fit."""
+
+    def build():
         f = _features(spark, sf_dir)
         if train_where is not None:
             f = f.filter(F.expr(train_where))
-        cached = _gd_fit(f, d=4)
-        _LR_CACHE[key] = cached
-    return cached
+        return _gd_fit(f, d=4)
+
+    return derived(spark, sf_dir, f"lr:{train_where}", build)
 
 
 def _gd_fit(f: DataFrame, d: int) -> tuple[list[float], float]:
@@ -559,9 +556,16 @@ def stream_lr_keep_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     w, tau = _train(spark, sf_dir)
-    schema = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).schema
+    # the readStream schema, sniffed once per (session, sf_dir): a
+    # footer read costs one Spark job and the base table is fixed
+    schema = derived(
+        spark,
+        sf_dir,
+        "documents_schema",
+        lambda: spark.read.parquet(
+            os.path.join(sf_dir, "documents.parquet")
+        ).schema,
+    )
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -655,9 +659,6 @@ def quality_lr_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG_PATHS: dict[tuple[str, str], str] = {}
-
-
 @query(
     "model_registry_lineage",
     oracle=f"""
@@ -693,11 +694,7 @@ def model_registry_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_wordcounter_spark.session import scratch_dir
     from mapreduce_wordcounter_spark.sources.versioned import VersionedTable
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _REG_PATHS.get(key)
-    if path is not None and len(VersionedTable(path).versions()) < 2:
-        path = None
-    if path is None:
+    def build():
         path = _os.path.join(scratch_dir("model_registry_"), "quality_lr")
         vt = VersionedTable(path)
         names = list(_FEATURES) + ["threshold"]
@@ -720,8 +717,12 @@ def model_registry_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "weight": F.col("s_weight"),
             },
         )
-        _REG_PATHS[key] = path
-    vt = VersionedTable(path)
+        return path
+
+    def valid(path):
+        return len(VersionedTable(path).versions()) >= 2
+
+    vt = VersionedTable(derived(spark, sf_dir, "model_registry", build, valid))
     out = None
     for v in (0, 1):
         part = vt.read(spark, v).select(
@@ -874,24 +875,20 @@ def _hashed_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HLR_CACHE: dict[tuple, tuple[list[float], float]] = {}
-
-
 def _train_hashed(
     spark: SparkSession, sf_dir: str, train_where: str | None = None
 ) -> tuple[list[float], float]:
     """The 17-dim hashed-feature fit — same K, learning rate, link,
     quantization, and calibration as the 4-feature model (the
     dimension-generic _gd_fit), cached per (session, sf_dir, split)."""
-    key = (spark.sparkContext.applicationId, sf_dir, train_where)
-    cached = _HLR_CACHE.get(key)
-    if cached is None:
+
+    def build():
         f = _hashed_frame(spark, sf_dir)
         if train_where is not None:
             f = f.filter(F.expr(train_where))
-        cached = _gd_fit(f, d=_HD_D)
-        _HLR_CACHE[key] = cached
-    return cached
+        return _gd_fit(f, d=_HD_D)
+
+    return derived(spark, sf_dir, f"hlr:{train_where}", build)
 
 
 @query(

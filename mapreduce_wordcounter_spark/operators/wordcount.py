@@ -698,9 +698,6 @@ def stream_pyds_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-_PYDS_SINK_PATHS: dict[tuple[str, str], str] = {}
-
-
 @query(
     "pyds_roundtrip_wordcount",
     oracle=f"""
@@ -727,20 +724,15 @@ def pyds_roundtrip_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     the read-back is a plain partition-parallel JSON scan."""
     import os
 
-    from mapreduce_wordcounter_spark.session import scratch_dir
+    from mapreduce_wordcounter_spark.session import derived, scratch_dir
     from mapreduce_wordcounter_spark.sources.pydatasource import (
         manifest_files,
         register_sink,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _PYDS_SINK_PATHS.get(key)
-    if path is not None and not manifest_files(path):
-        path = None  # at-rest artifact evicted externally -> rebuild
-    if path is None:
+    def build():
         register_sink(spark)  # idempotent (session-local flag)
         path = os.path.join(scratch_dir("pyds_sink_"), "wc")
-        _PYDS_SINK_PATHS[key] = path
         (
             wc_counts(spark, sf_dir)
             # repartition, not coalesce: AQE coalesces the tiny
@@ -752,6 +744,10 @@ def pyds_roundtrip_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("append")
             .save()
         )
+        return path
+
+    # An evicted sink dir has no manifest left, so it is rebuilt.
+    path = derived(spark, sf_dir, "pyds_sink", build, manifest_files)
     # Manifest-driven read: only files the two-phase commit actually
     # published — never a part-* glob, which would also include orphans
     # from failed/speculative task attempts (see manifest_files).
@@ -760,9 +756,6 @@ def pyds_roundtrip_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_words"),
         F.sum("cnt").cast("bigint").alias("total_tokens"),
     )
-
-
-_PYDS_STREAM_SINK_PATHS: dict[str, str] = {}
 
 
 @query("stream_pyds_sink_roundtrip", oracle=_ORACLE["pyds_wordcount"])
@@ -784,7 +777,7 @@ def stream_pyds_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import time
 
-    from mapreduce_wordcounter_spark.session import scratch_dir
+    from mapreduce_wordcounter_spark.session import derived, scratch_dir
     from mapreduce_wordcounter_spark.sources.pydatasource import (
         manifest_files,
         manifest_total_rows,
@@ -792,16 +785,11 @@ def stream_pyds_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_sink,
     )
 
-    key = spark.sparkContext.applicationId
-    path = _PYDS_STREAM_SINK_PATHS.get(key)
-    if path is not None and not manifest_files(path):
-        path = None  # at-rest artifact evicted externally -> rebuild
-    if path is None:
+    def build():
         register(spark)       # both idempotent
         register_sink(spark)  # (session-local flags)
         base = scratch_dir("pyds_stream_sink_")
         path = os.path.join(base, "docs")
-        _PYDS_STREAM_SINK_PATHS[key] = path
         docs = (
             spark.readStream.format("synthetic_corpus")
             .option("n_docs", 200)
@@ -831,6 +819,11 @@ def stream_pyds_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise TimeoutError(f"stream sink committed only {n}/200 docs")
         finally:
             q.stop()
+        return path
+
+    # The source synthesizes its own corpus, so the sink is one per
+    # session (sf_dir=None); an evicted sink dir has no manifest left.
+    path = derived(spark, None, "pyds_stream_sink", build, manifest_files)
     # Manifest-driven read (see manifest_files): only the files each
     # batch's idempotent commit published.
     back = spark.read.schema("doc_id long, text string, n_words int").json(

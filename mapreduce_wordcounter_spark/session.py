@@ -142,6 +142,33 @@ def scratch_dir(prefix: str = "mrwc_") -> str:
     return d
 
 
+_DERIVED: dict[tuple, object] = {}
+
+
+def derived(spark: SparkSession, sf_dir: str | None, name: str, build, valid=None):
+    """Session memo for state derived from the inputs: at-rest
+    artifacts (a versioned lineage, a sorted copy, a sink directory —
+    the value is its path) and small driver-side results (a model fit,
+    a schema probe). Keyed by (applicationId, sf_dir, name); pass
+    ``sf_dir=None`` for state that does not depend on the input tables.
+
+    A stored value is returned while ``valid(value)`` holds (always,
+    when ``valid`` is None); otherwise ``build()`` runs and its result
+    is stored. At-rest artifacts can vanish under a live session
+    (scratch cleaners, a partial earlier build), so their ``valid``
+    checks the artifact itself. The value is stored only after
+    ``build()`` returns: a build that raises leaves no entry, and the
+    next call builds again."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    if key in _DERIVED:
+        value = _DERIVED[key]
+        if valid is None or valid(value):
+            return value
+    value = build()
+    _DERIVED[key] = value
+    return value
+
+
 _SCRATCH_TABLES: list[str] = []
 
 

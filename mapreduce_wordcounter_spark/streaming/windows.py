@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 
 from mapreduce_wordcounter_spark.functions.numeric import dsum, sql_dsum
 from mapreduce_wordcounter_spark.registry import query
-from mapreduce_wordcounter_spark.session import ensure_utc
+from mapreduce_wordcounter_spark.session import derived, ensure_utc
 from mapreduce_wordcounter_spark.tables import load_table, table_rows, task_width
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
@@ -241,12 +241,18 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic) and as TIMESTAMP(MICROS) NTZ (cast to session-tz
     TIMESTAMP — sessions pin UTC so the instant is unchanged). A
     readStream needs its schema up front, so sniff it with a batch
-    read; parquet schema inference reads the footer in a Spark job, so
-    each call runs one small job."""
+    read; parquet schema inference reads the footer in a Spark job.
+    Base tables are fixed for a session, so the sniff runs once per
+    (session, sf_dir) and later drains reuse it (session.derived)."""
     ensure_utc(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
-    ts_is_nanos_long = dict(spark.read.parquet(path).dtypes)["ts"] == "bigint"
+    ts_is_nanos_long = derived(
+        spark,
+        sf_dir,
+        "events_ts_is_nanos_long",
+        lambda: dict(spark.read.parquet(path).dtypes)["ts"] == "bigint",
+    )
     ts_type = T.LongType() if ts_is_nanos_long else T.TimestampNTZType()
     raw = (
         spark.readStream.schema(_events_raw_schema(ts_type))

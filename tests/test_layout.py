@@ -115,6 +115,32 @@ def test_zorder_probe_matches_raw_scan(spark):
     assert probe.equals(raw), (probe, raw)
 
 
+def test_zorder_table_rebuilds_after_scratch_eviction(spark):
+    """The z-sorted copy is session state held at rest: when its
+    scratch dir is removed under a live session, the next probe
+    rebuilds the copy at a new path and returns the same rows."""
+    import os
+    import shutil
+
+    from mapreduce_wordcounter_spark.session import _DERIVED
+
+    def probe():
+        return (
+            _QUERIES["zorder_probe"](spark, SF)
+            .toPandas()
+            .sort_values("event_type")
+            .reset_index(drop=True)
+        )
+
+    before = probe()
+    key = (spark.sparkContext.applicationId, SF, "zorder_table")
+    old = _DERIVED[key]
+    shutil.rmtree(os.path.dirname(old))
+    after = probe()
+    assert _DERIVED[key] != old
+    assert after.equals(before), (before, after)
+
+
 def test_dpp_prunes_fact_partitions(spark):
     """The star-join must carry a runtime partition filter: the fact
     scan's PartitionFilters must contain a dynamicpruning expression

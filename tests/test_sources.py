@@ -27,7 +27,7 @@ from mapreduce_wordcounter_spark.sources.writers import (
     write_partitioned_parquet,
 )
 from mapreduce_wordcounter_spark.tables import load_table
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 @pytest.fixture()
@@ -417,13 +417,13 @@ def test_pyds_sink_commit_protocol(spark):
     import json as _json
 
     from mapreduce_wordcounter_spark.operators.wordcount import (
-        _PYDS_SINK_PATHS,
         pyds_roundtrip_wordcount,
     )
+    from mapreduce_wordcounter_spark.session import _DERIVED
 
     row = pyds_roundtrip_wordcount(spark, "/root/testdata/sf0.001").collect()[0]
-    key = (spark.sparkContext.applicationId, "/root/testdata/sf0.001")
-    path = _PYDS_SINK_PATHS[key]
+    key = (spark.sparkContext.applicationId, SF_SMOKE, "pyds_sink")
+    path = _DERIVED[key]
     manifest = _json.load(open(path + "/_MANIFEST.json"))
     parts = sorted(glob.glob(path + "/part-*.jsonl"))
     assert len(parts) == 4  # repartition(4): one committed file per task
@@ -441,9 +441,9 @@ def test_pyds_stream_sink_batch_manifests(spark):
     import json as _json
 
     from mapreduce_wordcounter_spark.operators.wordcount import (
-        _PYDS_STREAM_SINK_PATHS,
         stream_pyds_sink_roundtrip,
     )
+    from mapreduce_wordcounter_spark.session import _DERIVED
 
     total_tokens = (
         stream_pyds_sink_roundtrip(spark, "/root/testdata/sf0.001")
@@ -451,7 +451,7 @@ def test_pyds_stream_sink_batch_manifests(spark):
         .collect()[0][0]
     )
     assert total_tokens == 200 * 20
-    path = _PYDS_STREAM_SINK_PATHS[spark.sparkContext.applicationId]
+    path = _DERIVED[(spark.sparkContext.applicationId, None, "pyds_stream_sink")]
     manifests = sorted(glob.glob(path + "/_MANIFEST-*.json"))
     assert len(manifests) >= 1
     doc_total = sum(
@@ -467,13 +467,13 @@ def test_pyds_sink_manifest_read_excludes_orphans(spark):
     crashed mid-write must both be invisible to the round-trip — the
     two-phase commit is only real if the reader honors it."""
     from mapreduce_wordcounter_spark.operators.wordcount import (
-        _PYDS_SINK_PATHS,
         pyds_roundtrip_wordcount,
     )
+    from mapreduce_wordcounter_spark.session import _DERIVED
 
     before = pyds_roundtrip_wordcount(spark, "/root/testdata/sf0.001").collect()[0]
-    path = _PYDS_SINK_PATHS[
-        (spark.sparkContext.applicationId, "/root/testdata/sf0.001")
+    path = _DERIVED[
+        (spark.sparkContext.applicationId, SF_SMOKE, "pyds_sink")
     ]
     orphan = path + "/part-99999-424242.jsonl"
     staging = path + "/part-99998-424243.jsonl.staging"

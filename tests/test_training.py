@@ -15,11 +15,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_wordcounter_spark.operators import training as T
+from mapreduce_wordcounter_spark.session import _DERIVED
 from tests.conftest import SF_SMOKE
 
 
 def _fresh_fit(spark, sf_dir):
-    T._LR_CACHE.clear()
+    _DERIVED.pop((spark.sparkContext.applicationId, sf_dir, "lr:None"), None)
     return T._train(spark, sf_dir)
 
 

@@ -219,6 +219,27 @@ def test_stream_merge_lineage_and_time_travel(spark):
     assert vt.read(spark).count() == base + n_inserts
 
 
+def test_versioned_orders_rebuilds_after_eviction(spark):
+    """The orders lineage is session state held at rest: when its
+    directory is removed under a live session, the next read rebuilds
+    all three versions at a new path and time travel returns the same
+    rows."""
+    import shutil
+
+    from mapreduce_wordcounter_spark.operators.lakehouse import (
+        table_time_travel,
+        versioned_orders,
+    )
+    from tests.conftest import SF_SMOKE as sf
+
+    before = sorted(table_time_travel(spark, sf).collect())
+    old = versioned_orders(spark, sf).path
+    shutil.rmtree(old)
+    after = sorted(table_time_travel(spark, sf).collect())
+    assert versioned_orders(spark, sf).path != old
+    assert after == before
+
+
 def test_optimize_recluster_restores_pruning(spark, tmp_path):
     """OPTIMIZE: merges fragment the file layout (each rewrite batch
     adds files with mixed key ranges); optimize rewrites the snapshot
