@@ -69,7 +69,7 @@ from mapreduce_wordcounter_spark.operators.dedup import _DUCK_MD5H, _SPARK_MD5H
 from mapreduce_wordcounter_spark.operators.text import _SQL_TOKS, _toks_col
 from mapreduce_wordcounter_spark.registry import query
 from mapreduce_wordcounter_spark.session import derived
-from mapreduce_wordcounter_spark.tables import load_table, table_rows
+from mapreduce_wordcounter_spark.tables import load_table, read_parquet, table_rows
 
 _K = 5  # gradient-descent steps
 _LR = 12.0  # learning rate (fast-sigmoid gradients are ~4x flatter)
@@ -556,16 +556,7 @@ def stream_lr_keep_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     w, tau = _train(spark, sf_dir)
-    # the readStream schema, sniffed once per (session, sf_dir): a
-    # footer read costs one Spark job and the base table is fixed
-    schema = derived(
-        spark,
-        sf_dir,
-        "documents_schema",
-        lambda: spark.read.parquet(
-            os.path.join(sf_dir, "documents.parquet")
-        ).schema,
-    )
+    schema = read_parquet(spark, os.path.join(sf_dir, "documents.parquet")).schema
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")

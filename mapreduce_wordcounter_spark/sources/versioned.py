@@ -76,6 +76,8 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_wordcounter_spark.tables import read_parquet
+
 _SNAP_DIR = "_snapshots"
 
 # Partition-directory prefix: ``data/<commit>/_p__lang=en/part-*.parquet``.
@@ -847,13 +849,13 @@ class VersionedTable:
             fresh = self._checkpoint_stats_path(v)
             if not os.path.exists(fresh):
                 return None  # nothing stats-bearing to materialize
-            return spark.read.parquet(fresh)
+            return read_parquet(spark, fresh)
         if not base_paths:
             # every tree part pruned by key_range: nothing can match
             return None
         # normalize to the stats-relation schema (tree parts carry an
         # extra n_rows column the delta-patch unions must not see)
-        rel = spark.read.parquet(*base_paths).select(
+        rel = read_parquet(spark, *base_paths).select(
             "file", "lo", "hi", "bloom_m", "bloom_hex"
         )
         schema = rel.schema
@@ -1234,8 +1236,8 @@ class VersionedTable:
         broadcasts. ``keep_pos=True`` keeps the (file, pos) columns for
         the DV writer itself."""
         rels = snap["files"] if files is None else files
-        raw = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.path, f) for f in rels]
+        raw = read_parquet(
+            spark, *[os.path.join(self.path, f) for f in rels], merge=True
         )
         dv = snap.get("dv") or {}
         basenames = {os.path.basename(f) for f in rels}
@@ -1249,8 +1251,8 @@ class VersionedTable:
             ).withColumn("__dv_pos", F.col("_metadata.row_index"))
         if dv_paths:
             dvdf = (
-                spark.read.parquet(
-                    *[os.path.join(self.path, p) for p in dv_paths]
+                read_parquet(
+                    spark, *[os.path.join(self.path, p) for p in dv_paths]
                 )
                 .select(
                     F.col("file").alias("__dv_file"),
@@ -1658,7 +1660,7 @@ class VersionedTable:
         for v, rel in parts:
             p = rel if os.path.isabs(rel) else os.path.join(self.path, rel)
             dfs.append(
-                spark.read.parquet(p).withColumn(
+                read_parquet(spark, p).withColumn(
                     "__q_version", F.lit(v).cast("int")
                 )
             )
@@ -2466,8 +2468,10 @@ class VersionedTable:
         columns as NULL — additive evolution plus metadata-only
         RENAME/DROP via column mapping (type changes are the caller's
         migration). With mapping active the physical scan is projected
-        to this snapshot's LOGICAL columns. Cost is a footer read per
-        file of ONE snapshot — bounded metadata."""
+        to this snapshot's LOGICAL columns. The merged schema of ONE
+        snapshot's files is inferred by a footer-read job on its first
+        read in a session (``tables.read_parquet``); data files are
+        never rewritten, so later reads of that snapshot run no job."""
         snap = self.snapshot(version)
         files = [os.path.join(self.path, f) for f in snap["files"]]
         if not files:
@@ -3441,8 +3445,8 @@ class VersionedTable:
         if not paths:
             return None
         return (
-            spark.read.parquet(
-                *[os.path.join(self.path, p) for p in paths]
+            read_parquet(
+                spark, *[os.path.join(self.path, p) for p in paths]
             )
             .distinct()
             .filter(F.col("file").isin(list(dv.keys())))
@@ -3771,16 +3775,20 @@ class VersionedTable:
                     return self.read_changes(spark, key, v_from, v_to)
                 if not m["cdc"]:
                     continue  # no-op commit
-                df = spark.read.option("mergeSchema", "true").parquet(
-                    *[os.path.join(self.path, f) for f in m["cdc"]]
+                df = read_parquet(
+                    spark,
+                    *[os.path.join(self.path, f) for f in m["cdc"]],
+                    merge=True,
                 )
             elif op == "append":
                 added = m.get("add") or []
                 if not added:
                     continue
                 rows = self._project(
-                    spark.read.option("mergeSchema", "true").parquet(
-                        *[os.path.join(self.path, f) for f in added]
+                    read_parquet(
+                        spark,
+                        *[os.path.join(self.path, f) for f in added],
+                        merge=True,
                     ),
                     self.snapshot(v),
                 )

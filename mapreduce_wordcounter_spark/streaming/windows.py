@@ -31,8 +31,13 @@ from pyspark.sql import types as T
 
 from mapreduce_wordcounter_spark.functions.numeric import dsum, sql_dsum
 from mapreduce_wordcounter_spark.registry import query
-from mapreduce_wordcounter_spark.session import derived, ensure_utc
-from mapreduce_wordcounter_spark.tables import load_table, table_rows, task_width
+from mapreduce_wordcounter_spark.session import ensure_utc
+from mapreduce_wordcounter_spark.tables import (
+    load_table,
+    read_parquet,
+    table_rows,
+    task_width,
+)
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
 _DFMT = "%Y-%m-%d %H:%M:%S"
@@ -240,19 +245,12 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP(NANOS) (read as int64, converted with integer µs
     arithmetic) and as TIMESTAMP(MICROS) NTZ (cast to session-tz
     TIMESTAMP — sessions pin UTC so the instant is unchanged). A
-    readStream needs its schema up front, so sniff it with a batch
-    read; parquet schema inference reads the footer in a Spark job.
-    Base tables are fixed for a session, so the sniff runs once per
-    (session, sf_dir) and later drains reuse it (session.derived)."""
+    readStream needs its schema up front; it comes from the batch
+    read's schema, inferred once per session (tables.read_parquet)."""
     ensure_utc(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
-    ts_is_nanos_long = derived(
-        spark,
-        sf_dir,
-        "events_ts_is_nanos_long",
-        lambda: dict(spark.read.parquet(path).dtypes)["ts"] == "bigint",
-    )
+    ts_is_nanos_long = dict(read_parquet(spark, path).dtypes)["ts"] == "bigint"
     ts_type = T.LongType() if ts_is_nanos_long else T.TimestampNTZType()
     raw = (
         spark.readStream.schema(_events_raw_schema(ts_type))

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_wordcounter_spark.session import derived
+
 TABLES = [
     "region",
     "nation",
@@ -28,9 +30,60 @@ TABLES = [
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _stat_fingerprint(paths) -> tuple | None:
+    """(inode, mtime ns, size) of each path; None if any stat fails."""
+    try:
+        return tuple(
+            (st.st_ino, st.st_mtime_ns, st.st_size) for st in map(os.stat, paths)
+        )
+    except OSError:
+        return None
+
+
+def _stat_memo(spark: SparkSession, name: str, paths, compute):
+    """``compute()`` served through ``session.derived`` while ``paths``
+    still stat the same: a file replaced under the same path (new
+    inode, mtime or size) is computed again. A path that does not stat
+    is never served from the memo. The fingerprint is taken before
+    ``compute()`` runs, so a change during it is caught next call."""
+
+    def build():
+        return _stat_fingerprint(paths), compute()
+
+    def valid(entry):
+        return entry[0] is not None and _stat_fingerprint(paths) == entry[0]
+
+    return derived(spark, None, name, build, valid)[1]
+
+
+def read_parquet(spark: SparkSession, *paths: str, merge: bool = False) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema inferred once per
+    session. Schema inference reads footers in a Spark job on every
+    read; here it runs on the first read of exactly this path list
+    (``mergeSchema`` when ``merge``) and later reads pass the stored
+    schema, so building the read runs no job. The path order is part
+    of the key: merged column order follows it.
+
+    For base tables (fixed for a session, like ``table_rows``) and
+    files the versioned protocol never rewrites; the stat fingerprint
+    re-infers a table replaced under the same path. Mutable scratch
+    and sink reads stay on ``spark.read``. Schema confs must not change
+    within a session: the engine sets only ``nanosAsLong``, always to
+    true, before reading ``events``."""
+
+    def infer():
+        reader = spark.read.option("mergeSchema", "true") if merge else spark.read
+        return reader.parquet(*paths).schema
+
+    key = f"parquet_schema:{int(merge)}:" + "\n".join(paths)
+    return spark.read.schema(_stat_memo(spark, key, paths, infer)).parquet(*paths)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan for one table. Column pruning + predicate pushdown
     happen automatically once callers ``select``/``filter`` (Catalyst).
+    The schema is inferred once per session (``read_parquet``), so
+    only the first load of a table runs a footer-read job.
 
     ``events.ts`` has shipped in two physical encodings across corpus
     generations, so the loader adapts to whichever it finds:
@@ -49,11 +102,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
         if dict(df.dtypes)["ts"] == "bigint":
             return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 _BYTE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -143,7 +196,10 @@ def spread_narrow_scan(
     sortBeforeRepartition local sort (guide §2.5), retry-safe by
     construction, and a downstream groupBy/join on the same key can
     reuse the partitioning instead of planning a second exchange."""
-    size = _dataset_bytes(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    size = _stat_memo(
+        spark, f"dataset_bytes:{path}", [path], lambda: _dataset_bytes(path)
+    )
     if size is None:
         return df
     p = spark.sparkContext.defaultParallelism
