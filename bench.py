@@ -2,9 +2,14 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+  python bench.py             the HEADLINE set
+  python bench.py NAME...     only the named queries
+
+With no names, prints ONE JSON line
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <scale factor>}
+and writes the full per-query map to BENCH_local.json. With names,
+prints only {name: sec, ...} for them and writes no file.
 
 Each query is forced end-to-end with the noop sink (full execution, no
 driver-side result transfer). Timings exclude session startup and JVM /
@@ -291,13 +296,14 @@ BUILD_TIER = {
 }
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
     queries = all_queries()
+    run = names or HEADLINE
 
-    for name in HEADLINE:  # untimed warm-up pass (JIT/codegen)
+    for name in run:  # untimed warm-up pass (JIT/codegen)
         queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     # Timed passes, min per query: single-run wall times at this
@@ -327,12 +333,16 @@ def main() -> None:
             spark.sparkContext._jvm.System.gc()
         except Exception:
             pass
-        for name in HEADLINE:
+        for name in run:
             fn = queries[name]
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = round(time.perf_counter() - t0, 3)
             timings[name] = min(timings.get(name, dt), dt)
+
+    if names:
+        print(json.dumps(timings))
+        return
 
     total = round(sum(timings.values()), 3)
     serve_total = round(
@@ -403,4 +413,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -29,18 +29,15 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_wordcounter_spark.functions.portable import split_words
 
 def count_words(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
     """(word, cnt) over arbitrary text files — wc_counts semantics
     (SURVEY.md Appendix A) applied to ``spark.read.text`` lines instead
     of the documents table."""
-    from mapreduce_wordcounter_spark.operators.wordcount import TOKEN_SEP
-
     lines = spark.read.text(list(paths))
     return (
-        lines.select(
-            F.explode(F.split(F.lower(F.col("value")), TOKEN_SEP)).alias("word")
-        )
+        lines.select(F.explode(split_words("value")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_wordcounter_spark.functions.portable import sql_split_words
 from mapreduce_wordcounter_spark.registry import query
 from mapreduce_wordcounter_spark.tables import load_table
 
@@ -47,9 +48,9 @@ def tokenize_udtf():
 
 @query(
     "udtf_tokenize_counts",
-    oracle="""
+    oracle=f"""
     SELECT word, COUNT(*) AS cnt
-    FROM (SELECT unnest(regexp_split_to_array(lower(text), '[^\\p{L}]+')) AS word
+    FROM (SELECT unnest({sql_split_words()}) AS word
           FROM documents) t
     WHERE word <> ''
     GROUP BY word

@@ -34,29 +34,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_wordcounter_spark.functions.portable import (
+    md5h,
+    sql_md5h,
+    sql_words,
+    words,
+)
 from mapreduce_wordcounter_spark.registry import ORACLE, query
 from mapreduce_wordcounter_spark.tables import load_table
 
-# --- engine-portable hashing fragments --------------------------------------
-
-# md5 → first 15 hex digits → BIGINT (60 bits, non-negative). Verified
-# bit-identical Spark vs DuckDB; one hash call per string, fully
-# codegen-able (vs a per-character lambda fold).
-_SPARK_MD5H = "cast(conv(substring(md5({s}), 1, 15), 16, 10) as bigint)"
-_DUCK_MD5H = "CAST(('0x' || substring(md5({s}), 1, 15)) AS BIGINT)"
-
-_SQL_TOKS = (
-    "list_filter(regexp_split_to_array(lower(text), '[^\\p{L}]+'), x -> x <> '')"
-)
-
 # 3-gram word shingles, distinct per doc, with their portable hash ids.
 _DUCK_SHINGLES = f"""
-    SELECT DISTINCT doc_id, s, ({_DUCK_MD5H.format(s='s')}) % 2147483647 AS sid
+    SELECT DISTINCT doc_id, s, ({sql_md5h('s')}) % 2147483647 AS sid
     FROM (
         SELECT doc_id,
                unnest(list_transform(generate_series(1, len(t) - 2),
                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-        FROM (SELECT doc_id, {_SQL_TOKS} AS t FROM documents) d
+        FROM (SELECT doc_id, {sql_words()} AS t FROM documents) d
     ) x
 """
 
@@ -99,9 +93,7 @@ def _spark_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = docs.select(
         "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), r"[^\p{L}]+"), lambda x: x != ""
-        ).alias("t"),
+        words().alias("t"),
     )
     # array_distinct BEFORE the explode: per-doc dedup is a per-row op,
     # so the (doc_id, s) stream is distinct by construction — the
@@ -125,7 +117,7 @@ def _spark_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from mapreduce_wordcounter_spark.session import pin
 
-    return pin(sh.withColumn("sid", F.expr(f"({_SPARK_MD5H.format(s='s')}) % {_P}")))
+    return pin(sh.withColumn("sid", F.expr(f"({md5h('s')}) % {_P}")))
 
 
 # ---------------------------------------------------------------------------
@@ -180,8 +172,8 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id, fingerprint FROM (
         SELECT doc_id,
-               md5(array_to_string({_SQL_TOKS}, ' ')) AS fingerprint,
-               ROW_NUMBER() OVER (PARTITION BY md5(array_to_string({_SQL_TOKS}, ' '))
+               md5(array_to_string({sql_words()}, ' ')) AS fingerprint,
+               ROW_NUMBER() OVER (PARTITION BY md5(array_to_string({sql_words()}, ' '))
                                   ORDER BY doc_id) AS rn
         FROM documents) t
     WHERE rn = 1
@@ -191,7 +183,7 @@ def dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-first dedup as a window: survivors of token-stream
     fingerprint collisions (whitespace/punct-insensitive dedup)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower(F.col("text")), r"[^\p{L}]+"), lambda x: x != "")
+    toks = words()
     from pyspark.sql import Window as W
 
     fp = docs.select("doc_id", F.md5(F.array_join(toks, " ")).alias("fingerprint"))
@@ -559,8 +551,8 @@ def minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     "simhash32",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, unnest({_SQL_TOKS}) AS word FROM documents),
-    th AS (SELECT doc_id, {_DUCK_MD5H.format(s='word')} AS h FROM tok),
+        SELECT doc_id, unnest({sql_words()}) AS word FROM documents),
+    th AS (SELECT doc_id, {sql_md5h('word')} AS h FROM tok),
     bits AS (
         SELECT doc_id, b,
                SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS weight
@@ -601,10 +593,10 @@ def simhash32(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id",
         F.explode(
-            F.filter(F.split(F.lower(F.col("text")), r"[^\p{L}]+"), lambda x: x != "")
+            words()
         ).alias("word"),
     )
-    th = tok.select("doc_id", F.expr(_SPARK_MD5H.format(s="word")).alias("h"))
+    th = tok.select("doc_id", F.expr(md5h("word")).alias("h"))
     votes = th.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -643,8 +635,8 @@ _HAM_MAX = _HAM_BLOCKS - 1  # pigeonhole guarantee: H < B
 
 _DUCK_SIMHASH60 = f"""
     WITH tok AS (
-        SELECT doc_id, unnest({_SQL_TOKS}) AS word FROM documents),
-    th AS (SELECT doc_id, {_DUCK_MD5H.format(s='word')} AS h FROM tok),
+        SELECT doc_id, unnest({sql_words()}) AS word FROM documents),
+    th AS (SELECT doc_id, {sql_md5h('word')} AS h FROM tok),
     bits AS (
         SELECT doc_id, b,
                SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS weight
@@ -677,10 +669,10 @@ def _simhash60(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id",
         F.explode(
-            F.filter(F.split(F.lower(F.col("text")), r"[^\p{L}]+"), lambda x: x != "")
+            words()
         ).alias("word"),
     )
-    th = tok.select("doc_id", F.expr(_SPARK_MD5H.format(s="word")).alias("h"))
+    th = tok.select("doc_id", F.expr(md5h("word")).alias("h"))
     votes = th.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -1106,8 +1098,8 @@ _WINNOW_W = 4  # window of consecutive 3-gram hashes per fingerprint
     WITH h AS (
         SELECT doc_id,
                list_transform(generate_series(1, len(t) - 2),
-                   i -> ({_DUCK_MD5H.format(s="t[i] || ' ' || t[i+1] || ' ' || t[i+2]")}) % {_P}) AS hs
-        FROM (SELECT doc_id, {_SQL_TOKS} AS t FROM documents) d
+                   i -> ({sql_md5h("t[i] || ' ' || t[i+1] || ' ' || t[i+2]")}) % {_P}) AS hs
+        FROM (SELECT doc_id, {sql_words()} AS t FROM documents) d
         WHERE len(t) >= 3)
     SELECT DISTINCT doc_id,
            unnest(list_transform(generate_series(1, greatest(len(hs) - {_WINNOW_W - 1}, 1)),
@@ -1135,13 +1127,11 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), r"[^\p{L}]+"), lambda x: x != ""
-        ).alias("t"),
+        words().alias("t"),
     ).filter(F.size("t") >= 3)
     gram = "concat(element_at(t, i), ' ', element_at(t, i + 1), ' ', element_at(t, i + 2))"
     hashes = F.expr(
-        f"transform(sequence(1, size(t) - 2), i -> ({_SPARK_MD5H.format(s=gram)}) % {_P})"
+        f"transform(sequence(1, size(t) - 2), i -> ({md5h(gram)}) % {_P})"
     )
     fps = F.expr(
         f"array_distinct(transform(sequence(1, greatest(size(hs) - {_WINNOW_W - 1}, 1)),"
@@ -1158,8 +1148,8 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH h AS (
         SELECT doc_id,
                list_transform(generate_series(1, len(t) - 2),
-                   i -> ({_DUCK_MD5H.format(s="t[i] || ' ' || t[i+1] || ' ' || t[i+2]")}) % {_P}) AS hs
-        FROM (SELECT doc_id, {_SQL_TOKS} AS t FROM documents) d
+                   i -> ({sql_md5h("t[i] || ' ' || t[i+1] || ' ' || t[i+2]")}) % {_P}) AS hs
+        FROM (SELECT doc_id, {sql_words()} AS t FROM documents) d
         WHERE len(t) >= 3),
     fp AS (
         SELECT DISTINCT doc_id,
@@ -1234,8 +1224,7 @@ _DUCK_PARAGRAPHS = f"""
                unnest(generate_series(1, greatest((len(t) + {_PARA_TOKENS - 1}) // {_PARA_TOKENS}, 0))) AS seg_no
         FROM (
             SELECT doc_id, line_no,
-                   list_filter(regexp_split_to_array(lower(line), '[^\\p{{L}}]+'),
-                               x -> x <> '') AS t
+                   {sql_words("line")} AS t
             FROM (
                 SELECT doc_id,
                        unnest(list_filter(list_transform(string_split(text, chr(10)),
@@ -1262,9 +1251,7 @@ def paragraph_relation(docs: DataFrame) -> DataFrame:
     ).select(
         "doc_id",
         (F.col("line_idx") + 1).alias("line_no"),
-        F.filter(
-            F.split(F.lower(F.col("line")), r"[^\p{L}]+"), lambda x: x != ""
-        ).alias("t"),
+        words("line").alias("t"),
     ).filter(F.size("t") > 0)
     segs_arr = F.expr(
         f"transform(sequence(1, size(t), {_PARA_TOKENS}),"

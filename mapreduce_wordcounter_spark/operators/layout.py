@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from mapreduce_wordcounter_spark.functions.portable import md5h, sql_md5h
 from mapreduce_wordcounter_spark.registry import ORACLE, query
 from mapreduce_wordcounter_spark.tables import load_table
 
@@ -584,13 +585,8 @@ _DUCK_Z3 = "CAST(" + " + ".join(
 # third dimension: a deterministic portable code for event_type (no
 # semantic order needed for clustering — only that equal types share
 # a code)
-from mapreduce_wordcounter_spark.operators.dedup import (  # noqa: E402
-    _DUCK_MD5H,
-    _SPARK_MD5H,
-)
-
-_SPARK_T = f"({_SPARK_MD5H.format(s='event_type')}) % {_MASK3}"
-_DUCK_T = f"({_DUCK_MD5H.format(s='event_type')}) % {_MASK3}"
+_SPARK_T = f"({md5h('event_type')}) % {_MASK3}"
+_DUCK_T = f"({sql_md5h('event_type')}) % {_MASK3}"
 
 
 @query(

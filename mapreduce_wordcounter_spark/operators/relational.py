@@ -37,6 +37,12 @@ from mapreduce_wordcounter_spark.functions.numeric import (
     sql_davg,
     sql_dsum,
 )
+from mapreduce_wordcounter_spark.functions.portable import (
+    md5h,
+    sql_md5h,
+    sql_words,
+    words,
+)
 from mapreduce_wordcounter_spark.registry import query
 from mapreduce_wordcounter_spark.session import ensure_utc
 from mapreduce_wordcounter_spark.tables import load_table
@@ -973,11 +979,10 @@ def cte_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lateral_posexplode",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, i - 1 AS pos, t[i] AS word
     FROM (SELECT doc_id,
-                 list_filter(regexp_split_to_array(lower(text), '[^\\p{L}]+'),
-                             x -> x <> '') AS t
+                 {sql_words()} AS t
           FROM documents) d,
          LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) ix
     WHERE doc_id < 25
@@ -987,9 +992,7 @@ def lateral_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode/LATERAL-VIEW: token stream with ordinal positions —
     the order-preserving UDTF shape (vs explode's bag semantics)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 25)
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"[^\p{L}]+"), lambda x: x != ""
-    )
+    toks = words()
     return docs.select(
         "doc_id", F.posexplode(toks).alias("pos", "word")
     )
@@ -1158,15 +1161,14 @@ def json_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "array_functions",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            len(t) AS n_toks,
            array_to_string(list_sort(t)[1:3], ',') AS first3_sorted,
            list_contains(t, 'the') AS has_the,
            len(list_distinct(t)) AS n_distinct
     FROM (SELECT doc_id,
-                 list_filter(regexp_split_to_array(lower(text), '[^\\p{L}]+'),
-                             x -> x <> '') AS t
+                 {sql_words()} AS t
           FROM documents) d
     WHERE doc_id < 50
     """,
@@ -1176,9 +1178,7 @@ def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, sort+slice+join, membership, distinct count — all JVM
     expression trees (ASCII corpus → collation-safe sort parity)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"[^\p{L}]+"), lambda x: x != ""
-    )
+    toks = words()
     t = docs.select("doc_id", toks.alias("t"))
     return t.select(
         "doc_id",
@@ -2747,8 +2747,7 @@ def lineitem_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH assigned AS (
         SELECT event_type, value,
-               CASE WHEN (CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)),
-                                1, 15)) AS BIGINT)) % 2 = 0
+               CASE WHEN ({sql_md5h("CAST(user_id AS VARCHAR)")}) % 2 = 0
                     THEN 'A' ELSE 'B' END AS arm
         FROM events)
     SELECT event_type, arm, CAST(COUNT(*) AS BIGINT) AS n,
@@ -2760,7 +2759,7 @@ def experiment_assignment_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-based A/B assignment + per-arm outcome means: the
     product-analytics primitive — deterministic unit-of-randomization
     hashing (user_id → arm via the repo's portable md5-prefix
-    construction, dedup.py's _SPARK_MD5H/_DUCK_MD5H pair) followed by
+    construction, functions/portable.py md5h/sql_md5h) followed by
     guardrail metrics per arm. Engine-native hashes (xxhash64 vs
     DuckDB hash()) deliberately avoided: they disagree across engines,
     which is exactly the bug this portable split exists to prevent.
@@ -2768,10 +2767,7 @@ def experiment_assignment_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-row hash projection + one map-combined groupBy — the
     assignment never shuffles the corpus."""
     e = load_table(spark, sf_dir, "events")
-    arm_hash = F.expr(
-        "cast(conv(substring(md5(cast(user_id as string)), 1, 15), 16, 10)"
-        " as bigint)"
-    )
+    arm_hash = F.expr(md5h("cast(user_id as string)"))
     arm = F.when(arm_hash % 2 == 0, "A").otherwise("B")
     return (
         e.select("event_type", "value", arm.alias("arm"))

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from mapreduce_wordcounter_spark.operators.dedup import _DUCK_MD5H, _SPARK_MD5H
+from mapreduce_wordcounter_spark.functions.portable import md5h, sql_md5h
 from mapreduce_wordcounter_spark.registry import ORACLE, query
 from mapreduce_wordcounter_spark.tables import load_table
 
@@ -417,7 +417,7 @@ def _duck_kmeans_ctes(n_iters: int = _IVF_ITERS) -> str:
     Lloyd loop the Spark side runs (a_i = sample assignment after i
     updates; c_i = codebook from a_{i-1}; af = the single full-corpus
     assignment against the trained codebook c{T})."""
-    init_hash = _DUCK_MD5H.format(s="CAST(vec_id AS VARCHAR)")
+    init_hash = sql_md5h("CAST(vec_id AS VARCHAR)")
     parts = [
         "xm AS (SELECT vec_id, pos, CAST(FLOOR(x * 1000.0 + 0.5) AS BIGINT) AS xm"
         f" FROM ({_DUCK_LONG}) lv)",
@@ -478,7 +478,7 @@ def _spark_kmeans(
         )
     )
     emb = _emb(spark, sf_dir)
-    init_hash = _SPARK_MD5H.format(s="cast(vec_id as string)")
+    init_hash = md5h("cast(vec_id as string)")
     in_sample = F.expr(f"({init_hash}) % {_IVF_TRAIN_MOD} = 0")
     xt = xm.filter(in_sample)
     assign = emb.filter(in_sample).select(
@@ -1224,10 +1224,8 @@ def _duck_pq_ctes(n_iters: int = _IVF_ITERS) -> str:
     cosine. Codebook positions are globally unique (pos carries the
     subspace), so the distance joins need only pos."""
     norm = _DUCK_NORM.format(v="embedding")
-    init_hash = _DUCK_MD5H.format(
-        s="'pq' || CAST(m AS VARCHAR) || ':' || CAST(vec_id AS VARCHAR)"
-    )
-    sample_hash = _DUCK_MD5H.format(s="CAST(vec_id AS VARCHAR)")
+    init_hash = sql_md5h("'pq' || CAST(m AS VARCHAR) || ':' || CAST(vec_id AS VARCHAR)")
+    sample_hash = sql_md5h("CAST(vec_id AS VARCHAR)")
     parts = [
         "xn AS (SELECT vec_id, i - 1 AS pos,"
         f" (i - 1) // {_PQ_DIM} AS m,"
@@ -1321,7 +1319,7 @@ def _spark_pq_build(
 
     emb = _emb(spark, sf_dir)
     xn = pin(_spark_xn(spark, sf_dir))
-    sample_hash = _SPARK_MD5H.format(s="cast(vec_id as string)")
+    sample_hash = md5h("cast(vec_id as string)")
     in_sample = F.expr(f"({sample_hash}) % {_IVF_TRAIN_MOD} = 0")
     pt = xn.filter(in_sample)
     w = W.partitionBy("vec_id", "m").orderBy(
@@ -1346,9 +1344,7 @@ def _spark_pq_build(
             .select("vec_id", "m", "cell")
         )
 
-    init_hash = _SPARK_MD5H.format(
-        s="'pq' || cast(m as string) || ':' || cast(vec_id as string)"
-    )
+    init_hash = md5h("'pq' || cast(m as string) || ':' || cast(vec_id as string)")
     ms = F.array([F.lit(m) for m in range(_PQ_M)])
     assign = (
         emb.filter(in_sample)

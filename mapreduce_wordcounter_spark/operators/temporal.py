@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from mapreduce_wordcounter_spark.functions.portable import md5h, sql_md5h
 from mapreduce_wordcounter_spark.registry import query
 from mapreduce_wordcounter_spark.session import ensure_utc
 from mapreduce_wordcounter_spark.tables import load_table
@@ -1330,21 +1331,14 @@ _BOOT_R = 32  # bootstrap replicates
 # Poisson(1) inverse-CDF thresholds on a uniform draw in [0, 1e6):
 # cumulative probabilities x 1e6, capped at w = 5 (P(w > 5) < 0.06%).
 _BOOT_CDF = (367879, 735759, 919699, 981012, 996340)
-_SPARK_BOOT_U = (
-    "cast(conv(substring(md5(concat(cast(event_id as string), ':', "
-    "cast(r as string))), 1, 15), 16, 10) as bigint) % 1000000"
-)
-_DUCK_BOOT_U = (
-    "CAST(('0x' || substring(md5(CAST(event_id AS VARCHAR) || ':' || "
-    "CAST(r AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000"
-)
 
 
-def _boot_w(u: str) -> str:
-    """Engine-shared CASE mapping a uniform micro-draw to a Poisson(1)
-    weight (same text compiles in Spark SQL and DuckDB)."""
+def _boot_w(h: str) -> str:
+    """CASE mapping the uniform micro-draw ``h % 1000000`` of the
+    portable hash ``h`` to a Poisson(1) weight (the branches compile in
+    both Spark SQL and DuckDB)."""
     branches = " ".join(
-        f"WHEN ({u}) < {t} THEN {w}" for w, t in enumerate(_BOOT_CDF)
+        f"WHEN ({h} % 1000000) < {t} THEN {w}" for w, t in enumerate(_BOOT_CDF)
     )
     return f"CASE {branches} ELSE 5 END"
 
@@ -1358,7 +1352,9 @@ def _boot_w(u: str) -> str:
                r
         FROM events e CROSS JOIN (
             SELECT unnest(generate_series(0, {_BOOT_R - 1})) AS r) rs),
-    w AS (SELECT r, vm, {_boot_w(_DUCK_BOOT_U)} AS w FROM rep),
+    w AS (SELECT r, vm,
+                 {_boot_w(sql_md5h("CAST(event_id AS VARCHAR) || ':' || CAST(r AS VARCHAR)"))}
+                 AS w FROM rep),
     means AS (
         SELECT r,
                ROUND(CAST(SUM(w * vm) AS DOUBLE) / SUM(w) / 1000000.0, 6)
@@ -1420,7 +1416,10 @@ def ev_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("vm"),
         F.explode(F.sequence(F.lit(0), F.lit(_BOOT_R - 1))).alias("r"),
-    ).withColumn("w", F.expr(_boot_w(_SPARK_BOOT_U)))
+    ).withColumn(
+        "w",
+        F.expr(_boot_w(md5h("concat(cast(event_id as string), ':', cast(r as string))"))),
+    )
     means = (
         rep.groupBy("r")
         .agg(F.sum(F.col("w") * F.col("vm")).alias("s"), F.sum("w").alias("n"))

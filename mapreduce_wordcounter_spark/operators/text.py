@@ -20,23 +20,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_wordcounter_spark.functions.portable import (
+    md5h,
+    sql_md5h,
+    sql_words,
+    words,
+)
 from mapreduce_wordcounter_spark.operators.dedup import (
-    _DUCK_MD5H,
     _DUCK_PARAGRAPHS,
-    _SPARK_MD5H,
     paragraph_relation,
 )
-from mapreduce_wordcounter_spark.operators.wordcount import TOKEN_SEP, tokens
+from mapreduce_wordcounter_spark.operators.wordcount import tokens
 from mapreduce_wordcounter_spark.registry import ORACLE, query
 from mapreduce_wordcounter_spark.tables import load_table
 
 # Shared oracle fragments -----------------------------------------------------
 
-_SQL_TOKS = (
-    "list_filter(regexp_split_to_array(lower(text), '[^\\p{L}]+'), x -> x <> '')"
-)
 _SQL_TOKEN_ROWS = (
-    f"SELECT doc_id, lang, source, unnest({_SQL_TOKS}) AS word FROM documents"
+    f"SELECT doc_id, lang, source, unnest({sql_words()}) AS word FROM documents"
 )
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -48,13 +49,6 @@ _SQL_STOPS = "('" + "', '".join(STOPWORDS) + "')"
 _PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _PII_PHONE = r"\b[0-9]{3}-[0-9]{3}-[0-9]{4}\b"
 _PII_IPV4 = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
-
-
-def _toks_col() -> F.Column:
-    """Filtered token array column (non-empty tokens, lowercased)."""
-    return F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SEP), lambda x: x != ""
-    )
 
 
 @query(
@@ -88,7 +82,7 @@ def _ngram_query(n: int):
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        grams = docs.select(_toks_col().alias("toks")).select(
+        grams = docs.select(words().alias("toks")).select(
             F.explode(
                 # sequence(1, k) is DESCENDING in Spark when k < 1 — guard
                 # short documents explicitly (DuckDB generate_series is
@@ -125,7 +119,7 @@ def _register_ngrams() -> None:
         SELECT gram, COUNT(*) AS cnt FROM (
             SELECT unnest(list_transform(generate_series(1, len(toks) - {n - 1}),
                                          i -> {duck_gram})) AS gram
-            FROM (SELECT {_SQL_TOKS} AS toks FROM documents) d
+            FROM (SELECT {sql_words()} AS toks FROM documents) d
         ) g
         GROUP BY gram
         ORDER BY cnt DESC, gram
@@ -324,7 +318,7 @@ def word_rarity_bottom10(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "doc_fingerprint",
     oracle=f"""
-    SELECT doc_id, md5(array_to_string({_SQL_TOKS}, ' ')) AS fingerprint
+    SELECT doc_id, md5(array_to_string({sql_words()}, ' ')) AS fingerprint
     FROM documents
     """,
 )
@@ -335,7 +329,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.md5(F.array_join(_toks_col(), " ")).alias("fingerprint"),
+        F.md5(F.array_join(words(), " ")).alias("fingerprint"),
     )
 
 
@@ -354,7 +348,7 @@ _BP_N = 5
         SELECT DISTINCT doc_id,
                unnest(list_transform(generate_series(1, len(t) - {_BP_N - 1}),
                       i -> {" || ' ' || ".join(f"t[i+{j}]" for j in range(_BP_N))})) AS gram
-        FROM (SELECT doc_id, {_SQL_TOKS} AS t FROM documents) d) x
+        FROM (SELECT doc_id, {sql_words()} AS t FROM documents) d) x
     GROUP BY gram
     HAVING COUNT(*) >= 2
     ORDER BY n_docs DESC, gram
@@ -377,7 +371,7 @@ def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"element_at(toks, i + {j})" for j in range(_BP_N)
     ) + ")"
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select("doc_id", _toks_col().alias("toks")).select(
+    grams = docs.select("doc_id", words().alias("toks")).select(
         F.explode(
             F.array_distinct(
                 F.when(
@@ -410,9 +404,9 @@ _SPLIT_TRAIN, _SPLIT_VAL = 80, 90  # [0,80) train, [80,90) val, rest test
     "dataset_split_assign",
     oracle=f"""
     SELECT doc_id,
-           ({_DUCK_MD5H.format(s='text')}) % {_SPLIT_BUCKETS} AS bucket,
-           CASE WHEN ({_DUCK_MD5H.format(s='text')}) % {_SPLIT_BUCKETS} < {_SPLIT_TRAIN} THEN 'train'
-                WHEN ({_DUCK_MD5H.format(s='text')}) % {_SPLIT_BUCKETS} < {_SPLIT_VAL} THEN 'validation'
+           ({sql_md5h('text')}) % {_SPLIT_BUCKETS} AS bucket,
+           CASE WHEN ({sql_md5h('text')}) % {_SPLIT_BUCKETS} < {_SPLIT_TRAIN} THEN 'train'
+                WHEN ({sql_md5h('text')}) % {_SPLIT_BUCKETS} < {_SPLIT_VAL} THEN 'validation'
                 ELSE 'test' END AS split
     FROM documents
     """,
@@ -423,7 +417,7 @@ def dataset_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection (no shuffle at any scale); the engine-portable md5
     fragment keeps Spark and DuckDB bit-identical."""
     docs = load_table(spark, sf_dir, "documents")
-    bucket = F.expr(f"({_SPARK_MD5H.format(s='text')}) % {_SPLIT_BUCKETS}")
+    bucket = F.expr(f"({md5h('text')}) % {_SPLIT_BUCKETS}")
     return docs.select(
         "doc_id",
         bucket.alias("bucket"),
@@ -533,11 +527,10 @@ def vocab_top1k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "source_unigram_kl",
-    oracle="""
+    oracle=f"""
     WITH sc AS (
         SELECT source, word, COUNT(*) AS cnt_s
-        FROM (SELECT source, unnest(list_filter(
-                  regexp_split_to_array(lower(text), '[^\\p{L}]+'), x -> x <> '')) AS word
+        FROM (SELECT source, unnest({sql_words()}) AS word
               FROM documents) t
         GROUP BY source, word),
     stot AS (SELECT source, SUM(cnt_s) AS n_s FROM sc GROUP BY source),
@@ -613,7 +606,7 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id, lang
     FROM documents
-    WHERE ({_DUCK_MD5H.format(s='text')}) % 1000 < 100
+    WHERE ({sql_md5h('text')}) % 1000 < 100
     """,
 )
 def deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -627,7 +620,7 @@ def deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     time."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.filter(
-        F.expr(f"({_SPARK_MD5H.format(s='text')}) % 1000 < 100")
+        F.expr(f"({md5h('text')}) % 1000 < 100")
     ).select("doc_id", "lang")
 
 
@@ -731,7 +724,7 @@ def _doc_ngrams(
             "documents",
             key="doc_id",
             rows_per_task=160,
-        ).select("doc_id", _toks_col().alias("t"))
+        ).select("doc_id", words().alias("t"))
     return toks.select("doc_id", F.explode(grams).alias("gram"))
 
 
@@ -741,7 +734,7 @@ def _duck_doc_ngrams(n: int) -> str:
         SELECT doc_id,
                unnest(list_transform(generate_series(1, len(t) - {n - 1}),
                                      i -> {duck_gram})) AS gram
-        FROM (SELECT doc_id, {_SQL_TOKS} AS t FROM documents) d
+        FROM (SELECT doc_id, {sql_words()} AS t FROM documents) d
     """
 
 
@@ -849,7 +842,7 @@ def gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             "documents",
             key="doc_id",
             rows_per_task=160,
-        ).select("doc_id", _toks_col().alias("t"))
+        ).select("doc_id", words().alias("t"))
     )
     # r13 (guide §2.4): the three gram streams (n = 2, 3, 5) are
     # UNIONED with an n tag and aggregated through one shared exchange
@@ -992,7 +985,7 @@ _CONTAM_MOD = 10
 
 _DUCK_CONTAM = f"""
     WITH g AS (
-        SELECT DISTINCT doc_id, {_DUCK_MD5H.format(s='gram')} AS gh
+        SELECT DISTINCT doc_id, {sql_md5h('gram')} AS gh
         FROM ({_duck_doc_ngrams(_CONTAM_N)}) x),
     bench AS (SELECT DISTINCT gh FROM g WHERE doc_id % {_CONTAM_MOD} = 0),
     train AS (SELECT doc_id, gh FROM g WHERE doc_id % {_CONTAM_MOD} <> 0),
@@ -1015,7 +1008,7 @@ _DUCK_CONTAM = f"""
 def _contam_gram_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, gh): distinct 13-gram 60-bit hashes per document."""
     g = _doc_ngrams(spark, sf_dir, _CONTAM_N, distinct=True)
-    return g.select("doc_id", F.expr(_SPARK_MD5H.format(s="gram")).alias("gh"))
+    return g.select("doc_id", F.expr(md5h("gram")).alias("gh"))
 
 
 @query("benchmark_contamination", oracle=_DUCK_CONTAM)
@@ -1109,7 +1102,7 @@ _CURATE_MIN_SCORE = 6  # of 7 (3 C4-style gates + 4 Gopher repetition gates)
         SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY sha256(text)),
     survivors AS (
         SELECT d.doc_id, d.n_chars,
-               ({_DUCK_MD5H.format(s='d.text')}) % 100 AS bucket
+               ({sql_md5h('d.text')}) % 100 AS bucket
         FROM documents d
         JOIN keep k ON d.doc_id = k.doc_id
         JOIN (SELECT * FROM ({{qsg}}) q) qsg ON qsg.doc_id = d.doc_id
@@ -1156,7 +1149,7 @@ def pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qsg = quality_score_gopher(spark, sf_dir).select("doc_id", "gopher_score")
     contam = benchmark_contamination(spark, sf_dir).select("doc_id", "contaminated")
-    bucket = F.expr(f"({_SPARK_MD5H.format(s='text')}) % 100")
+    bucket = F.expr(f"({md5h('text')}) % 100")
     survivors = (
         docs.join(keep, "doc_id")
         .join(qsg, "doc_id")
@@ -1370,7 +1363,7 @@ _CHUNK_STRIDE = 48  # 16-token overlap between consecutive chunks
                AS n_tokens,
            md5(array_to_string(list_slice(t, start, start + {_CHUNK_TOKENS - 1}), ' '))
                AS chunk_md5
-    FROM (SELECT doc_id, {_SQL_TOKS} AS t FROM documents) d,
+    FROM (SELECT doc_id, {sql_words()} AS t FROM documents) d,
          LATERAL (SELECT unnest(generate_series(1, len(t), {_CHUNK_STRIDE})) AS start) s
     WHERE len(t) > 0
     """,
@@ -1388,7 +1381,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     same as the multimodal frame sampler, JVM-side here because slicing
     token arrays needs no codec."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", _toks_col().alias("t")).filter(F.size("t") > 0)
+    toks = docs.select("doc_id", words().alias("t")).filter(F.size("t") > 0)
     chunks = toks.select(
         "doc_id",
         F.explode(
@@ -1735,7 +1728,7 @@ def pii_redacted_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tok AS ({_SQL_TOKEN_ROWS}),
     tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM tok GROUP BY doc_id, word),
-    w AS (SELECT word, (({_DUCK_MD5H.format(s="word")}) % 2001) - 1000 AS w_milli
+    w AS (SELECT word, (({sql_md5h("word")}) % 2001) - 1000 AS w_milli
           FROM (SELECT DISTINCT word FROM tok) v),
     s AS (SELECT tf.doc_id,
                  CAST(SUM(tf.tf) AS BIGINT) AS n_tokens,
@@ -1770,7 +1763,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .select(
             "word",
-            F.expr(f"(({_SPARK_MD5H.format(s='word')}) % 2001) - 1000").alias(
+            F.expr(f"(({md5h('word')}) % 2001) - 1000").alias(
                 "w_milli"
             ),
         )
@@ -1808,11 +1801,10 @@ _STRAT_DEFAULT = 100
 
 @query(
     "mixture_weights",
-    oracle="""
+    oracle=f"""
     WITH slice_tokens AS (
         SELECT lang, source, COUNT(*) AS n_tokens
-        FROM (SELECT lang, source, unnest(list_filter(
-                  regexp_split_to_array(lower(text), '[^\\p{L}]+'), x -> x <> '')) AS w
+        FROM (SELECT lang, source, unnest({sql_words()}) AS w
               FROM documents) t
         GROUP BY lang, source)
     SELECT lang, source, n_tokens,
@@ -1847,7 +1839,7 @@ def mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id, lang
     FROM documents
-    WHERE ({_DUCK_MD5H.format(s='text')}) % 1000 <
+    WHERE ({sql_md5h('text')}) % 1000 <
           CASE lang WHEN 'zh' THEN {_STRAT_RATES["zh"]}
                     WHEN 'en' THEN {_STRAT_RATES["en"]}
                     ELSE {_STRAT_DEFAULT} END
@@ -1865,7 +1857,7 @@ def stratified_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("lang") == "en", _STRAT_RATES["en"])
         .otherwise(_STRAT_DEFAULT)
     )
-    h = F.expr(f"({_SPARK_MD5H.format(s='text')}) % 1000")
+    h = F.expr(f"({md5h('text')}) % 1000")
     return docs.filter(h < rate).select("doc_id", "lang")
 
 
@@ -1903,21 +1895,19 @@ def repeat_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_health_report",
     # One-row snapshot dashboard composing already-registered oracles
     # (derived-table nesting, as in pipeline_curate/repeat_upsample).
-    oracle="""
+    oracle=f"""
     SELECT
         (SELECT COUNT(*) FROM documents) AS n_docs,
-        (SELECT COUNT(*) FROM (SELECT unnest(list_filter(
-             regexp_split_to_array(lower(text), '[^\\p{L}]+'), x -> x <> ''))
+        (SELECT COUNT(*) FROM (SELECT unnest({sql_words()})
              FROM documents) t) AS n_tokens,
-        (SELECT COUNT(DISTINCT w) FROM (SELECT unnest(list_filter(
-             regexp_split_to_array(lower(text), '[^\\p{L}]+'), x -> x <> '')) AS w
+        (SELECT COUNT(DISTINCT w) FROM (SELECT unnest({sql_words()}) AS w
              FROM documents) t) AS vocab,
         (SELECT COUNT(*) - COUNT(DISTINCT sha256(text)) FROM documents)
             AS n_exact_dups,
         ROUND((SELECT CAST(COUNT(*) - COUNT(DISTINCT sha256(text)) AS DOUBLE)
                       / COUNT(*) FROM documents), 6) AS dup_rate,
-        (SELECT contaminated_frac FROM ({contam_rate}) c) AS contaminated_frac,
-        (SELECT zipf_slope FROM ({zipf}) z) AS zipf_slope
+        (SELECT contaminated_frac FROM ({{contam_rate}}) c) AS contaminated_frac,
+        (SELECT zipf_slope FROM ({{zipf}}) z) AS zipf_slope
     """.replace("{contam_rate}", ORACLE["benchmark_contamination_rate"]).replace(
         "{zipf}", ORACLE["zipf_slope"]
     ),
@@ -2022,12 +2012,12 @@ def c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same relation filtered to keep=true and re-joined in
     pos_in_doc order; the audit shape keeps the oracle order-free."""
     para = paragraph_relation(load_table(spark, sf_dir, "documents"))
-    words = F.split(F.col("seg"), " ")
-    keep = (F.size(words) >= _C4_MIN_WORDS) & (
-        ~F.array_contains(words, _C4_BADWORD)
+    seg_words = F.split(F.col("seg"), " ")
+    keep = (F.size(seg_words) >= _C4_MIN_WORDS) & (
+        ~F.array_contains(seg_words, _C4_BADWORD)
     )
     pl = para.select(
-        "doc_id", F.size(words).alias("n_words"), keep.alias("keep")
+        "doc_id", F.size(seg_words).alias("n_words"), keep.alias("keep")
     )
     kept = F.sum(F.when(F.col("keep"), 1).otherwise(0))
     return (
@@ -2046,11 +2036,10 @@ def c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mixture_temperature_weights",
-    oracle="""
+    oracle=f"""
     WITH slice_tokens AS (
         SELECT lang, COUNT(*) AS n_tokens
-        FROM (SELECT lang, unnest(list_filter(
-                  regexp_split_to_array(lower(text), '[^\\p{L}]+'), x -> x <> '')) AS w
+        FROM (SELECT lang, unnest({sql_words()}) AS w
               FROM documents) t
         GROUP BY lang),
     sq AS (
@@ -2820,25 +2809,11 @@ _DSIR_GUMBEL_CTES = f"""{_DSIR_LW_CTES},
     g AS (
         SELECT doc_id, lw_micro,
                lw_micro + CAST(FLOOR(-LN(-LN(
-                   (({{md5h}}) % {{p}} + 1)
-                   / {{p2}}.0)) * 1000000.0 + 0.5) AS BIGINT)
+                   (({sql_md5h(f"'gumbel:{_DSIR_GUMBEL_SEED}:' || CAST(doc_id AS VARCHAR)")})
+                    % {_GUMBEL_P} + 1)
+                   / {_GUMBEL_P + 2}.0)) * 1000000.0 + 0.5) AS BIGINT)
                AS key_micro
         FROM d)"""
-
-
-def _gumbel_ctes() -> str:
-    # .replace, not .format: the embedded token regex carries literal
-    # braces (\p{L}) that str.format would try to interpolate
-    return (
-        _DSIR_GUMBEL_CTES.replace(
-            "{md5h}",
-            _DUCK_MD5H.format(
-                s=f"'gumbel:{_DSIR_GUMBEL_SEED}:' || CAST(doc_id AS VARCHAR)"
-            ),
-        )
-        .replace("{p2}", str(_GUMBEL_P + 2))
-        .replace("{p}", str(_GUMBEL_P))
-    )
 
 
 def _gumbel_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2853,9 +2828,7 @@ def _gumbel_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("lw").cast("long").alias("lw_micro"))
     )
     h = F.expr(
-        _SPARK_MD5H.format(
-            s=f"concat('gumbel:{_DSIR_GUMBEL_SEED}:', cast(doc_id as string))"
-        )
+        md5h(f"concat('gumbel:{_DSIR_GUMBEL_SEED}:', cast(doc_id as string))")
     )
     u = ((h % _GUMBEL_P) + 1).cast("double") / F.lit(float(_GUMBEL_P + 2))
     g = F.floor(-F.log(-F.log(u)) * 1_000_000 + F.lit(0.5)).cast("long")
@@ -2867,7 +2840,7 @@ def _gumbel_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dsir_gumbel_sample",
     oracle=f"""
-    WITH {_gumbel_ctes()}
+    WITH {_DSIR_GUMBEL_CTES}
     SELECT doc_id, lw_micro, key_micro FROM g
     ORDER BY key_micro DESC, doc_id
     LIMIT {_DSIR_TOPK}
@@ -2906,7 +2879,7 @@ def dsir_gumbel_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dsir_gumbel_sample_fraction",
     oracle=f"""
-    WITH {_gumbel_ctes()},
+    WITH {_DSIR_GUMBEL_CTES},
     r AS (
         SELECT doc_id, lw_micro, key_micro,
                ROW_NUMBER() OVER (
@@ -3059,7 +3032,7 @@ ORACLE["source_gated_docs"] = ORACLE["source_gated_docs"].format(
                    unnest(list_transform(generate_series(1, len(toks) - 1),
                                          i -> toks[i] || ' ' || toks[i + 1]))
                        AS gram
-            FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents) d) g),
+            FROM (SELECT doc_id, {sql_words()} AS toks FROM documents) d) g),
     bc AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12
            FROM bg GROUP BY w1, w2),
     cc AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM bc GROUP BY w1),
@@ -3099,7 +3072,7 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # short documents with an explicit empty array, exactly matching
     # DuckDB's empty generate_series(1, len - 1).
     bg = (
-        docs.select("doc_id", _toks_col().alias("toks"))
+        docs.select("doc_id", words().alias("toks"))
         .select(
             "doc_id",
             F.explode(
@@ -3792,7 +3765,7 @@ def stratified_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
                                          i -> toks[i] || ' ' || toks[i + 1]))
                        AS gram
-            FROM (SELECT {_SQL_TOKS} AS toks FROM documents) d) g),
+            FROM (SELECT {sql_words()} AS toks FROM documents) d) g),
     bc AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12
            FROM bg GROUP BY w1, w2),
     nb AS (SELECT CAST(COUNT(*) AS BIGINT) AS nbg FROM bg),
@@ -3829,7 +3802,7 @@ def bigram_pmi_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = uni.agg(F.sum("c1").alias("n"))
     bg = (
-        docs.select(_toks_col().alias("toks"))
+        docs.select(words().alias("toks"))
         .select(
             F.explode(
                 F.when(
@@ -3882,7 +3855,7 @@ def bigram_pmi_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
               GROUP BY word ORDER BY cnt DESC, word LIMIT 1000) v),
     pos AS (
         SELECT d.doc_id, i AS pos, d.toks[i] AS word
-        FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents) d,
+        FROM (SELECT doc_id, {sql_words()} AS toks FROM documents) d,
              LATERAL (SELECT unnest(generate_series(1,
                           LEAST(len(d.toks), 32))) AS i) g),
     mapped AS (
@@ -3933,7 +3906,7 @@ def doc_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pos = docs.select(
         "doc_id",
-        F.posexplode(F.slice(_toks_col(), 1, 32)).alias("pos0", "word"),
+        F.posexplode(F.slice(words(), 1, 32)).alias("pos0", "word"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
     mapped = pos.join(F.broadcast(vocab), "word", "left").select(
         "doc_id", "pos", F.coalesce(F.col("id"), F.lit(0)).alias("id")
@@ -4059,11 +4032,11 @@ def pipeline_tokenize_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hashed_features",
     oracle=f"""
     SELECT doc_id,
-           ({{md5h}}) % 256 AS bucket,
+           ({sql_md5h("word")}) % 256 AS bucket,
            CAST(COUNT(*) AS BIGINT) AS cnt
     FROM ({_SQL_TOKEN_ROWS}) t
-    GROUP BY doc_id, ({{md5h}}) % 256
-    """.replace("{md5h}", _DUCK_MD5H.format(s="word")),
+    GROUP BY doc_id, ({sql_md5h("word")}) % 256
+    """,
 )
 def hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hashing trick: per-document sparse feature vector over 256
@@ -4078,7 +4051,7 @@ def hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, bucket) groupBy — the wc_per_source plan with a hashed
     grouping key."""
     t = tokens(spark, sf_dir)
-    bucket = (F.expr(_SPARK_MD5H.format(s="word")) % 256).alias("bucket")
+    bucket = (F.expr(md5h("word")) % 256).alias("bucket")
     return t.groupBy("doc_id", bucket).agg(F.count("*").alias("cnt"))
 
 
@@ -4165,7 +4138,7 @@ _WS_P = 1_000_003  # prime modulus for the unit-interval hash
     oracle=f"""
     WITH u AS (
         SELECT doc_id, n_chars,
-               CAST((({_DUCK_MD5H.format(s='text')}) % {_WS_P} + 1) AS DOUBLE)
+               CAST((({sql_md5h('text')}) % {_WS_P} + 1) AS DOUBLE)
                    / {_WS_P + 1}.0 AS u
         FROM documents),
     keyed AS (
@@ -4203,7 +4176,7 @@ def sample_weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison exact."""
     docs = load_table(spark, sf_dir, "documents")
     u = F.expr(
-        f"cast(({_SPARK_MD5H.format(s='text')}) % {_WS_P} + 1 as double)"
+        f"cast(({md5h('text')}) % {_WS_P} + 1 as double)"
         f" / {_WS_P + 1}.0"
     )
     keyed = docs.select(
@@ -4229,7 +4202,7 @@ _WS_K_GROUP = 20  # per-language sample size
     oracle=f"""
     WITH u AS (
         SELECT doc_id, lang, n_chars,
-               CAST((({_DUCK_MD5H.format(s='text')}) % {_WS_P} + 1) AS DOUBLE)
+               CAST((({sql_md5h('text')}) % {_WS_P} + 1) AS DOUBLE)
                    / {_WS_P + 1}.0 AS u
         FROM documents),
     keyed AS (
@@ -4261,7 +4234,7 @@ def sample_weighted_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     u = F.expr(
-        f"cast(({_SPARK_MD5H.format(s='text')}) % {_WS_P} + 1 as double)"
+        f"cast(({md5h('text')}) % {_WS_P} + 1 as double)"
         f" / {_WS_P + 1}.0"
     )
     keyed = docs.select(
@@ -4289,12 +4262,8 @@ def sample_weighted_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the corpus into ordered shards — hash(epoch, doc) gives both.
 _SHUFFLE_EPOCHS = 3
 _SHUFFLE_SHARDS = 8
-_EPOCH_KEY_S = _SPARK_MD5H.format(
-    s="concat(cast(epoch as string), ':', cast(doc_id as string))"
-)
-_EPOCH_KEY_D = _DUCK_MD5H.format(
-    s="CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)"
-)
+_EPOCH_KEY_S = md5h("concat(cast(epoch as string), ':', cast(doc_id as string))")
+_EPOCH_KEY_D = sql_md5h("CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)")
 
 
 @query(
@@ -4371,7 +4340,7 @@ def _phrase_posting_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(data: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         posting = docs.select(
-            "doc_id", F.posexplode(_toks_col()).alias("pos0", "word")
+            "doc_id", F.posexplode(words()).alias("pos0", "word")
         ).select(
             "doc_id",
             (F.col("pos0") + 1).cast("long").alias("pos"),
@@ -4399,7 +4368,7 @@ def _phrase_posting_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "search_phrase_positional",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {sql_words()} AS toks FROM documents),
     m AS (SELECT doc_id,
                  list_filter(generate_series(1, greatest(len(toks) - 1, 0)),
                              i -> toks[i] = '{_PHRASE[0]}'

@@ -65,8 +65,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from mapreduce_wordcounter_spark.functions.numeric import dsum, quantize, sql_dsum
-from mapreduce_wordcounter_spark.operators.dedup import _DUCK_MD5H, _SPARK_MD5H
-from mapreduce_wordcounter_spark.operators.text import _SQL_TOKS, _toks_col
+from mapreduce_wordcounter_spark.functions.portable import (
+    md5h,
+    sql_md5h,
+    sql_words,
+    words,
+)
 from mapreduce_wordcounter_spark.registry import query
 from mapreduce_wordcounter_spark.session import derived
 from mapreduce_wordcounter_spark.tables import load_table, read_parquet, table_rows
@@ -96,8 +100,8 @@ _FEAT_EXPRS = {
 _DUCK_FEATS = (
     "SELECT doc_id, bkt, "
     + ", ".join(f"{e} AS {c}" for c, e in _FEAT_EXPRS.items())
-    + f" FROM (SELECT doc_id, n_chars, len({_SQL_TOKS}) AS wc,"
-    + f" ({_DUCK_MD5H.format(s='text')}) % 100 AS bkt FROM documents) raw"
+    + f" FROM (SELECT doc_id, n_chars, len({sql_words()}) AS wc,"
+    + f" ({sql_md5h('text')}) % 100 AS bkt FROM documents) raw"
 )
 
 # z and s(z) as SQL over (x0..x{d-1}) x (w0..w{d-1}); the Spark twins
@@ -123,8 +127,8 @@ def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = d.select(
         "doc_id",
         "n_chars",
-        F.size(_toks_col()).alias("wc"),
-        F.expr(f"({_SPARK_MD5H.format(s='text')}) % 100").alias("bkt"),
+        F.size(words()).alias("wc"),
+        F.expr(f"({md5h('text')}) % 100").alias("bkt"),
     )
     return raw.select(
         "doc_id", "bkt", *[F.expr(e).alias(c) for c, e in _FEAT_EXPRS.items()]
@@ -563,7 +567,7 @@ def stream_lr_keep_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     )
     feats = raw.select(
-        "lang", "n_chars", F.size(_toks_col()).alias("wc")
+        "lang", "n_chars", F.size(words()).alias("wc")
     ).select("lang", *[F.expr(e).alias(c) for c, e in _FEAT_EXPRS.items()])
     s = _sig(_z_col(w))
     scored = feats.select(
@@ -803,16 +807,16 @@ _DUCK_HFEATS = (
     )
     + ", CASE WHEN d.n_chars + 10 * d.wc >= 850 THEN CAST(1 AS DOUBLE)"
     " ELSE CAST(0 AS DOUBLE) END AS y"
-    + f" FROM (SELECT doc_id, n_chars, len({_SQL_TOKS}) AS wc,"
-    + f" ({_DUCK_MD5H.format(s='text')}) % 100 AS bkt FROM documents) d"
+    + f" FROM (SELECT doc_id, n_chars, len({sql_words()}) AS wc,"
+    + f" ({sql_md5h('text')}) % 100 AS bkt FROM documents) d"
     + " LEFT JOIN (SELECT doc_id, "
     + ", ".join(
-        f"SUM(CASE WHEN ({_DUCK_MD5H.format(s='word')}) % {_HD} = {b}"
+        f"SUM(CASE WHEN ({sql_md5h('word')}) % {_HD} = {b}"
         f" THEN 1 ELSE 0 END) AS hb{b}"
         for b in range(_HD)
     )
     + " FROM (SELECT doc_id,"
-    f" unnest({_SQL_TOKS}) AS word FROM documents) t"
+    f" unnest({sql_words()}) AS word FROM documents) t"
     " GROUP BY doc_id) hb ON d.doc_id = hb.doc_id"
 )
 
@@ -828,10 +832,10 @@ def _hashed_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "n_chars",
-        F.size(_toks_col()).alias("wc"),
-        F.expr(f"({_SPARK_MD5H.format(s='text')}) % 100").alias("bkt"),
+        F.size(words()).alias("wc"),
+        F.expr(f"({md5h('text')}) % 100").alias("bkt"),
     )
-    b_expr = F.expr(f"({_SPARK_MD5H.format(s='word')}) % {_HD}")
+    b_expr = F.expr(f"({md5h('word')}) % {_HD}")
     hb = (
         tokens(spark, sf_dir)
         .select("doc_id", b_expr.alias("b"))

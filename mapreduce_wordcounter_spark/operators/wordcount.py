@@ -7,8 +7,9 @@ main.go:141-144), lowercased (main.go:148), empty tokens dropped
 (main.go:149); the result relation is (word, cnt) and the program's
 scalar output is the distinct vocabulary size (main.go:73).
 
-Spark-first mapping (SURVEY.md §2.3): ``explode(split(lower(text),
-'[^\\p{L}]+'))`` → ``filter(word <> '')`` → ``groupBy(word).count()``.
+Spark-first mapping (SURVEY.md §2.3): ``explode(split_words())`` →
+``filter(word <> '')`` → ``groupBy(word).count()``, with the tokenizer
+and its DuckDB twin defined once in ``functions/portable.py``.
 The map-side partial aggregate / shuffle / final merge the reference
 hand-builds (main.go:84-111) are Catalyst's partial+final
 HashAggregateExec — free, lock-free, and hash-partitioned (strictly
@@ -28,19 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_wordcounter_spark.functions.portable import (
+    md5h,
+    split_words,
+    sql_md5h,
+    sql_split_words,
+)
 from mapreduce_wordcounter_spark.registry import query
 from mapreduce_wordcounter_spark.tables import load_table
-
-# Separator = any non-letter, exactly `!unicode.IsLetter` (main.go:143).
-# Java regex and DuckDB's RE2 both implement the Unicode L* class.
-TOKEN_SEP = r"[^\p{L}]+"
-
-# DuckDB-side tokenizer fragment for the oracles (same regex dialect).
-_ORACLE_TOKENS = (
-    "SELECT doc_id, lang, source, "
-    "unnest(regexp_split_to_array(lower(text), '[^\\p{L}]+')) AS word "
-    "FROM documents"
-)
 
 
 def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,7 +51,7 @@ def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "lang",
             "source",
-            F.explode(F.split(F.lower(F.col("text")), TOKEN_SEP)).alias("word"),
+            F.explode(split_words()).alias("word"),
         )
         .filter(F.col("word") != "")
     )
@@ -65,7 +61,8 @@ def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wc_counts",
     oracle=f"""
     SELECT word, COUNT(*) AS cnt
-    FROM ({_ORACLE_TOKENS}) t
+    FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+          FROM documents) t
     WHERE word <> ''
     GROUP BY word
     """,
@@ -80,7 +77,8 @@ def wc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wc_vocab",
     oracle=f"""
     SELECT COUNT(DISTINCT word) AS vocab_size
-    FROM ({_ORACLE_TOKENS}) t
+    FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+          FROM documents) t
     WHERE word <> ''
     """,
 )
@@ -94,7 +92,8 @@ def wc_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wc_summary",
     oracle=f"""
     SELECT COUNT(*) AS total_tokens, COUNT(DISTINCT word) AS vocab_size
-    FROM ({_ORACLE_TOKENS}) t
+    FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+          FROM documents) t
     WHERE word <> ''
     """,
 )
@@ -110,7 +109,8 @@ def wc_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wc_top100",
     oracle=f"""
     SELECT word, COUNT(*) AS cnt
-    FROM ({_ORACLE_TOKENS}) t
+    FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+          FROM documents) t
     WHERE word <> ''
     GROUP BY word
     ORDER BY cnt DESC, word ASC
@@ -134,7 +134,8 @@ def wc_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wc_per_source",
     oracle=f"""
     SELECT source, word, COUNT(*) AS cnt
-    FROM ({_ORACLE_TOKENS}) t
+    FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+          FROM documents) t
     WHERE word <> ''
     GROUP BY source, word
     """,
@@ -153,7 +154,8 @@ def wc_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wc_doc_frequency",
     oracle=f"""
     SELECT word, COUNT(DISTINCT doc_id) AS df
-    FROM ({_ORACLE_TOKENS}) t
+    FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+          FROM documents) t
     WHERE word <> ''
     GROUP BY word
     """,
@@ -171,7 +173,8 @@ def wc_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wc_vocab_per_lang",
     oracle=f"""
     SELECT lang, COUNT(DISTINCT word) AS vocab_size
-    FROM ({_ORACLE_TOKENS}) t
+    FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+          FROM documents) t
     WHERE word <> ''
     GROUP BY lang
     """,
@@ -189,7 +192,8 @@ def wc_vocab_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wc_rdd_twin",
     oracle=f"""
     SELECT word, COUNT(*) AS cnt
-    FROM ({_ORACLE_TOKENS}) t
+    FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+          FROM documents) t
     WHERE word <> ''
     GROUP BY word
     """,
@@ -229,7 +233,8 @@ def wc_rdd_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT CAST(COUNT(DISTINCT word) AS BIGINT) AS vocab_exact,
            TRUE AS approx_within_5pct
-    FROM ({_ORACLE_TOKENS}) t
+    FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+          FROM documents) t
     WHERE word <> ''
     """,
 )
@@ -263,7 +268,8 @@ def wc_vocab_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT CAST(COUNT(DISTINCT word) AS BIGINT) AS vocab_exact,
            TRUE AS hll_within_3pct
-    FROM ({_ORACLE_TOKENS}) t
+    FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+          FROM documents) t
     WHERE word <> ''
     """,
 )
@@ -333,19 +339,17 @@ _CMS_D = 4  # hash rows
 _CMS_W = 1024  # buckets per row
 _CMS_TOPK = 50
 
-_SPARK_MD5H = "cast(conv(substring(md5({s}), 1, 15), 16, 10) as bigint)"
-_DUCK_MD5H = "CAST(('0x' || substring(md5({s}), 1, 15)) AS BIGINT)"
-
 
 @query(
     "wc_cms_heavy_hitters",
     oracle=f"""
     WITH wc AS (
         SELECT word, COUNT(*) AS n
-        FROM ({_ORACLE_TOKENS}) t WHERE word <> '' GROUP BY word),
+        FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+              FROM documents) t WHERE word <> '' GROUP BY word),
     wj AS (
         SELECT word, n, j,
-               ({_DUCK_MD5H.format(s="CAST(j AS VARCHAR) || ':' || word")})
+               ({sql_md5h("CAST(j AS VARCHAR) || ':' || word")})
                    % {_CMS_W} AS bucket
         FROM wc, (SELECT unnest(generate_series(0, {_CMS_D - 1})) AS j) rows),
     sk AS (
@@ -395,7 +399,7 @@ def wc_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     js = F.array([F.lit(j) for j in range(_CMS_D)])
     bucket = (
-        F.expr(_SPARK_MD5H.format(s="concat(cast(j as string), ':', word)"))
+        F.expr(md5h("concat(cast(j as string), ':', word)"))
         % _CMS_W
     )
     sk = (
@@ -442,7 +446,8 @@ def wc_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT word,
                MAX(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS in_en,
                MAX(CASE WHEN lang = 'zh' THEN 1 ELSE 0 END) AS in_zh
-        FROM ({_ORACLE_TOKENS}) t
+        FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+              FROM documents) t
         WHERE word <> '' AND lang IN ('en', 'zh')
         GROUP BY word)
     SELECT CAST(SUM(in_en) AS BIGINT) AS exact_en,
@@ -704,7 +709,8 @@ def stream_pyds_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(COUNT(*) AS BIGINT) AS n_words,
            CAST(SUM(cnt) AS BIGINT) AS total_tokens
     FROM (SELECT word, COUNT(*) AS cnt
-          FROM ({_ORACLE_TOKENS}) t
+          FROM (SELECT doc_id, lang, source, unnest({sql_split_words()}) AS word
+                FROM documents) t
           WHERE word <> ''
           GROUP BY word)
     """,

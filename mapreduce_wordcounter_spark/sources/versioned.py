@@ -76,6 +76,7 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_wordcounter_spark.functions.portable import md5h, py_md5h
 from mapreduce_wordcounter_spark.tables import read_parquet
 
 _SNAP_DIR = "_snapshots"
@@ -1848,13 +1849,8 @@ class VersionedTable:
         """k deterministic bit positions for a key value: md5 of the
         salted decimal string — engine/platform independent, the same
         recipe the repo's oracle-portable hashing uses everywhere."""
-        import hashlib
-
         return [
-            int(
-                hashlib.md5(f"{value}:{i}".encode()).hexdigest()[:15], 16
-            ) % m
-            for i in range(VersionedTable._BLOOM_K)
+            py_md5h(f"{value}:{i}") % m for i in range(VersionedTable._BLOOM_K)
         ]
 
     def _file_blooms(self, files: list[str]) -> dict:
@@ -2709,12 +2705,7 @@ class VersionedTable:
             n = {"days": 10, "hours": 13, "months": 7, "years": 4}[t]
             return str(v)[:n].replace(" ", "-")
         if t == "bucket":
-            import hashlib
-
-            return str(
-                int(hashlib.md5(str(v).encode()).hexdigest()[:15], 16)
-                % fld["arg"]
-            )
+            return str(py_md5h(str(v)) % fld["arg"])
         # truncate
         if isinstance(v, int):
             return str(v - (v % fld["arg"]))
@@ -2737,14 +2728,10 @@ class VersionedTable:
             }[t]
             return F.date_format(col, fmt)
         if t == "bucket":
-            # portable hash (same md5 recipe as the Bloom sidecars):
-            # 15 hex digits = 60 bits, engine-independent
-            return (
-                F.conv(
-                    F.substring(F.md5(col.cast("string")), 1, 15), 16, 10
-                ).cast("bigint")
-                % fld["arg"]
-            )
+            # functions/portable.py md5h, the Spark twin of the py_md5h
+            # in _transform_value and the Bloom sidecars
+            name = fld["phys"].replace("`", "``")
+            return F.expr(md5h(f"cast(`{name}` as string)")) % fld["arg"]
         # truncate
         if dtype_simple == "string":
             return F.substring(col, 1, fld["arg"])

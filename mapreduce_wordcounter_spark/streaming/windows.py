@@ -30,11 +30,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mapreduce_wordcounter_spark.functions.numeric import dsum, sql_dsum
+from mapreduce_wordcounter_spark.functions.portable import (
+    md5h,
+    split_words,
+    sql_split_words,
+)
 from mapreduce_wordcounter_spark.registry import query
 from mapreduce_wordcounter_spark.session import ensure_utc
 from mapreduce_wordcounter_spark.tables import (
+    events_ts,
     load_table,
-    read_parquet,
+    read_events_raw,
     table_rows,
     task_width,
 )
@@ -225,41 +231,18 @@ def ev_dedup_first_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as an unbounded stream: parquet file source (stand-in for
-    Kafka) with the same ts normalization as the batch loader
-    (tables.load_table): the corpus has shipped ``ts`` both as
-    TIMESTAMP(NANOS) (read as int64, converted with integer µs
-    arithmetic) and as TIMESTAMP(MICROS) NTZ (cast to session-tz
-    TIMESTAMP — sessions pin UTC so the instant is unchanged). A
-    readStream needs its schema up front; it comes from the batch
-    read's schema, inferred once per session (tables.read_parquet)."""
+    Kafka) with the batch loader's ts normalization (tables.events_ts).
+    A readStream needs its schema up front; it is the raw batch read's
+    schema, inferred once per session (tables.read_parquet)."""
     ensure_utc(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    ts_is_nanos_long = dict(read_parquet(spark, path).dtypes)["ts"] == "bigint"
-    ts_type = T.LongType() if ts_is_nanos_long else T.TimestampNTZType()
     raw = (
-        spark.readStream.schema(_events_raw_schema(ts_type))
+        spark.readStream.schema(read_events_raw(spark, sf_dir).schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if ts_is_nanos_long:
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events_ts(raw)
 
 
 @query(
@@ -818,9 +801,9 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_wc_counts",
-    oracle="""
+    oracle=f"""
     SELECT word, COUNT(*) AS cnt
-    FROM (SELECT unnest(regexp_split_to_array(lower(text), '[^\\p{L}]+')) AS word
+    FROM (SELECT unnest({sql_split_words()}) AS word
           FROM documents) t
     WHERE word <> ''
     GROUP BY word
@@ -835,8 +818,6 @@ def stream_wc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     because word counts are a global, ever-updating aggregate (at
     production scale this is update mode + a foreachBatch MERGE — see
     stream_foreach_batch_upsert for exactly that sink)."""
-    from mapreduce_wordcounter_spark.operators.wordcount import TOKEN_SEP
-
     ensure_utc(spark)
     docs = (
         spark.readStream.schema(DOCUMENTS_SCHEMA)
@@ -844,7 +825,7 @@ def stream_wc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     )
     counts = (
-        docs.select(F.explode(F.split(F.lower(F.col("text")), TOKEN_SEP)).alias("word"))
+        docs.select(F.explode(split_words()).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
@@ -883,8 +864,6 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         _CMS_D,
         _CMS_TOPK,
         _CMS_W,
-        _SPARK_MD5H,
-        TOKEN_SEP,
         tokens,
     )
 
@@ -908,12 +887,12 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, docs, sf_dir, "documents", key="doc_id", rows_per_task=160
     )
     toks = (
-        docs.select(F.explode(F.split(F.lower(F.col("text")), TOKEN_SEP)).alias("word"))
+        docs.select(F.explode(split_words()).alias("word"))
         .filter(F.col("word") != "")
     )
     js = F.array([F.lit(j) for j in range(_CMS_D)])
     bucket = (
-        F.expr(_SPARK_MD5H.format(s="concat(cast(j as string), ':', word)"))
+        F.expr(md5h("concat(cast(j as string), ':', word)"))
         % _CMS_W
     )
     sk_stream = (
@@ -1066,8 +1045,6 @@ def stream_quality_score_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the third foreachBatch posture next to the epoch-stamped
     upsert (aggregates) and the stateless projection (PII scrub):
     per-row model application with a broadcast weight artifact."""
-    from mapreduce_wordcounter_spark.operators.wordcount import TOKEN_SEP
-    from mapreduce_wordcounter_spark.operators.dedup import _SPARK_MD5H
     from mapreduce_wordcounter_spark.session import scratch_dir
 
     ensure_utc(spark)
@@ -1081,12 +1058,12 @@ def stream_quality_score_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     def score_batch(batch_df: DataFrame, epoch_id: int) -> None:
         t = batch_df.select(
             "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), TOKEN_SEP)).alias("word"),
+            F.explode(split_words()).alias("word"),
         ).filter(F.col("word") != "")
         tf = t.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
         w = tf.select("word").distinct().select(
             "word",
-            F.expr(f"(({_SPARK_MD5H.format(s='word')}) % 2001) - 1000").alias(
+            F.expr(f"(({md5h('word')}) % 2001) - 1000").alias(
                 "w_milli"
             ),
         )
@@ -1168,7 +1145,6 @@ def stream_dsir_lang_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused per micro-batch; the only streaming state is the bounded
     per-language counters (complete-mode aggregate)."""
     from mapreduce_wordcounter_spark.operators.text import _dsir_word_weights
-    from mapreduce_wordcounter_spark.operators.wordcount import TOKEN_SEP
 
     weights = _dsir_word_weights(spark, sf_dir)
     raw = (
@@ -1178,7 +1154,7 @@ def stream_dsir_lang_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tok = raw.select(
         "lang",
-        F.explode(F.split(F.lower(F.col("text")), TOKEN_SEP)).alias("word"),
+        F.explode(split_words()).alias("word"),
     ).filter(F.col("word") != "")
     agg = (
         tok.join(F.broadcast(weights), "word")

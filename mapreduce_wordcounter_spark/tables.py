@@ -83,10 +83,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan for one table. Column pruning + predicate pushdown
     happen automatically once callers ``select``/``filter`` (Catalyst).
     The schema is inferred once per session (``read_parquet``), so
-    only the first load of a table runs a footer-read job.
+    only the first load of a table runs a footer-read job. ``events``
+    gets its ``ts`` normalized (``events_ts``)."""
+    if name == "events":
+        return events_ts(read_events_raw(spark, sf_dir))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def read_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``events`` batch read before ``events_ts``: TIMESTAMP(NANOS)
+    columns come back as int64 (``nanosAsLong``)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
+
+
+def events_ts(df: DataFrame) -> DataFrame:
+    """Normalize ``ts`` of a raw events frame, batch or streaming.
 
     ``events.ts`` has shipped in two physical encodings across corpus
-    generations, so the loader adapts to whichever it finds:
+    generations, so this adapts to whichever ``df`` carries:
 
     - TIMESTAMP(NANOS): Spark's vectorized reader rejects it — read as
       raw int64 nanos and convert with integer arithmetic (``div``, not
@@ -98,15 +113,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       unix_micros are unchanged) so every downstream window/as-of query
       sees one stable type either way.
     """
-    if name == "events":
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
-        if dict(df.dtypes)["ts"] == "bigint":
-            return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    if dict(df.dtypes)["ts"] == "bigint":
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 _BYTE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
