@@ -31,6 +31,8 @@ tests/test_versioned.py).
 
 from __future__ import annotations
 
+import ast
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -558,6 +560,8 @@ def _stream_versioned_orders(spark: SparkSession, sf_dir: str) -> VersionedTable
     full orders projection; then 4 micro-batch MERGE commits from the
     chunked change stream."""
     def build():
+        from mapreduce_wordcounter_spark.streaming.windows import drain
+
         base_dir = scratch_dir("versioned_stream_")
         path = os.path.join(base_dir, "orders_v")
         vt = VersionedTable(path, stats_col="o_orderkey")
@@ -604,18 +608,9 @@ def _stream_versioned_orders(spark: SparkSession, sf_dir: str) -> VersionedTable
                 },
             )
 
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option(
-                "checkpointLocation", os.path.join(base_dir, "ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            stream, None, batch=apply_batch, checkpoint=os.path.join(base_dir, "ckpt")
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
         return path
 
     # Only a completed build is stored, so `valid` just detects external
@@ -644,6 +639,8 @@ def _stream_wap_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
     (main untouched through the whole drain) is hard-asserted before
     fast_forward publishes the staged chain."""
     def build():
+        from mapreduce_wordcounter_spark.streaming.windows import drain
+
         base_dir = scratch_dir("versioned_swap_")
         path = os.path.join(base_dir, "orders_v")
         vt = VersionedTable(path, stats_col="o_orderkey")
@@ -695,16 +692,9 @@ def _stream_wap_orders(spark: SparkSession, sf_dir: str) -> VersionedTable:
                 branch="staging",
             )
 
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(base_dir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            stream, None, batch=apply_batch, checkpoint=os.path.join(base_dir, "ckpt")
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
         # the WAP audit invariant, hard-asserted before publish: the
         # entire streamed ingestion left main byte-identical
         if vt.latest_version() != 0:
@@ -2869,6 +2859,8 @@ def _gated_stream_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
     expectation_metrics (violation counts observed by the batch's own
     write job)."""
     def build():
+        from mapreduce_wordcounter_spark.streaming.windows import drain
+
         base_dir = scratch_dir("versioned_gated_")
         path = os.path.join(base_dir, "docs_v")
         vt = VersionedTable(path)
@@ -2901,16 +2893,9 @@ def _gated_stream_docs(spark: SparkSession, sf_dir: str) -> VersionedTable:
                 return
             vt.append(batch_df)  # the gate lives in the write path
 
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(base_dir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            stream, None, batch=apply_batch, checkpoint=os.path.join(base_dir, "ckpt")
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
         return path
 
     path = derived(spark, sf_dir, "gated_stream_docs", build, _has_versions(3))
@@ -3043,19 +3028,19 @@ def stream_versioned_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     table VERSIONS, each micro-batch is the commits' added files —
     planned driver-side from KB manifest metadata, read
     partition-parallel as one task per added file yielding Arrow
-    RecordBatches. A 3-commit build drains under availableNow into a
-    per-lang count that must equal the batch aggregate (the oracle) —
-    append-only streaming off the table format closes the loop:
-    streams write INTO versioned tables (stream_merge_versioned,
-    stream_expectations_gated) and now read OUT of them.
+    RecordBatches. A 3-commit build drains, polled to its last version
+    (reached_version), into a per-lang count that must equal the batch
+    aggregate (the oracle) — append-only streaming off the table
+    format closes the loop: streams write INTO versioned tables
+    (stream_merge_versioned, stream_expectations_gated) and now read
+    OUT of them.
 
     Scale: incremental consumers (index refresh, downstream training
     shards) read each commit's churn exactly once — never the table;
     manifests are immutable, so any committed range replays exactly
     (exactly-once with zero external state)."""
-    import uuid as _uuid
-
     from mapreduce_wordcounter_spark.sources.pydatasource import register
+    from mapreduce_wordcounter_spark.streaming.windows import drain
 
     register(spark)  # idempotent (session-local flag)
 
@@ -3079,76 +3064,43 @@ def stream_versioned_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     agg = s.groupBy("lang").agg(F.count("*").alias("n_docs"))
-    name = "vstream_" + _uuid.uuid4().hex[:8]
-    ckpt = scratch_dir("vstream_ck_")
-    from mapreduce_wordcounter_spark.streaming.windows import (
-        stream_shuffle_partitions,
+    return drain(
+        agg,
+        table_rows(spark, sf_dir, "documents"),
+        "complete",
+        done=reached_version(VersionedTable(path).latest_version()),
     )
 
-    with stream_shuffle_partitions(
-        spark, table_rows(spark, sf_dir, "documents")
-    ):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(ckpt, "q"))
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
+
+def _offset_version(eo) -> int:
+    if isinstance(eo, dict):
+        return eo.get("version", -1)
+    # Python-source offsets surface in progress as either JSON or
+    # a Python dict repr (single quotes) depending on the path
+    try:
+        return json.loads(eo).get("version", -1)
+    except (ValueError, AttributeError):
         try:
-            _drain_versioned_stream(q, VersionedTable(path).latest_version())
-        finally:
-            q.stop()
-    return spark.table(name)
+            return ast.literal_eval(eo).get("version", -1)
+        except (ValueError, SyntaxError):
+            return -1
 
 
-def _drain_versioned_stream(q, target_version: int, timeout: float = 120.0):
-    """Drain a versioned_stream query to ``target_version`` under an
-    EXPLICIT processingTime trigger, then return (the caller stops the
-    query). Python stream sources fall back to single-batch under
-    Trigger.AvailableNow with a JVM WARN (VERDICT r9 #6); an explicit
-    micro-batch trigger plus an offset-watch drain is the documented
-    posture instead — and it COMPOSES with maxVersionsPerBatch (a
-    bounded backlog drains in several bounded batches, each visible in
-    progress). Progress rows are emitted only after a batch fully
-    commits to the sink, so endOffset >= target on a completed batch
-    means the sink holds every commit through target. Raises on
-    timeout — a partial drain must never be served silently
-    (ADVICE r9)."""
-    import ast as _ast
-    import json as _json
-    import time as _time
+def reached_version(target_version: int):
+    """``done`` predicate for draining a versioned_stream query to
+    ``target_version`` (streaming.windows.drain). Progress rows are
+    emitted only after a batch fully commits to the sink, so endOffset
+    >= target on the last completed batch means the sink holds every
+    commit through target. The polled drain composes with
+    maxVersionsPerBatch: a bounded backlog drains in several bounded
+    batches, each visible in progress."""
 
-    def _offset_version(eo) -> int:
-        if isinstance(eo, dict):
-            return eo.get("version", -1)
-        # Python-source offsets surface in progress as either JSON or
-        # a Python dict repr (single quotes) depending on the path
-        try:
-            return _json.loads(eo).get("version", -1)
-        except (ValueError, AttributeError):
-            try:
-                return _ast.literal_eval(eo).get("version", -1)
-            except (ValueError, SyntaxError):
-                return -1
-
-    deadline = _time.monotonic() + timeout
-    while _time.monotonic() < deadline:
-        if not q.isActive:
-            ex = q.exception()
-            if ex is not None:
-                raise ex  # the stream failed: surface it, don't time out
+    def done(q) -> bool:
         p = q.lastProgress
-        if p and p.get("sources"):
-            eo = p["sources"][0].get("endOffset")
-            if eo is not None and _offset_version(eo) >= target_version:
-                return
-        _time.sleep(0.05)
-    raise TimeoutError(
-        f"versioned stream did not drain to v{target_version} "
-        f"within {timeout:.0f}s"
-    )
+        eo = p["sources"][0].get("endOffset") if p and p.get("sources") else None
+        return eo is not None and _offset_version(eo) >= target_version
+
+    return done
 
 
 @query(
@@ -3180,12 +3132,8 @@ def stream_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: feed cost ∝ churn of the commits in range, read
     partition-parallel (one task per change file); exactly-once for
     free because manifests and change files are immutable."""
-    import uuid as _uuid
-
     from mapreduce_wordcounter_spark.sources.pydatasource import register
-    from mapreduce_wordcounter_spark.streaming.windows import (
-        stream_shuffle_partitions,
-    )
+    from mapreduce_wordcounter_spark.streaming.windows import drain
 
     register(spark)  # idempotent (session-local flag)
     vt = versioned_orders(spark, sf_dir)
@@ -3197,22 +3145,7 @@ def stream_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("startingVersion", "1")  # feed covers (1, latest]
         .load()
     )
-    name = "cdfstream_" + _uuid.uuid4().hex[:8]
-    ckpt = scratch_dir("cdfstream_ck_")
-    with stream_shuffle_partitions(spark, vt.count_rows()):
-        q = (
-            s.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(ckpt, "q"))
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            _drain_versioned_stream(q, vt.latest_version())
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(s, vt.count_rows(), done=reached_version(vt.latest_version()))
 
 
 def apply_cdf_mv_batch(spark, mv_path: str, batch: DataFrame, batch_id: int):
@@ -3333,13 +3266,9 @@ def stream_cdf_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE atomic commit), so foreachBatch replays after a restart are
     detected from the MV's own log and skipped (pinned in
     tests/test_versioned.py::test_cdf_mv_batch_replay_idempotent)."""
-    import uuid as _uuid
-
     from mapreduce_wordcounter_spark.functions.numeric import SCALE
     from mapreduce_wordcounter_spark.sources.pydatasource import register
-    from mapreduce_wordcounter_spark.streaming.windows import (
-        stream_shuffle_partitions,
-    )
+    from mapreduce_wordcounter_spark.streaming.windows import drain
 
     register(spark)  # idempotent (session-local flag)
     vt = versioned_orders(spark, sf_dir)
@@ -3356,18 +3285,12 @@ def stream_cdf_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     def apply_batch(batch, batch_id):
         apply_cdf_mv_batch(spark, mv_path, batch, batch_id)
 
-    ckpt = scratch_dir("cdf_mv_ck_")
-    with stream_shuffle_partitions(spark, vt.count_rows()):
-        q = (
-            s.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(ckpt, "q"))
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            _drain_versioned_stream(q, vt.latest_version())
-        finally:
-            q.stop()
+    drain(
+        s,
+        vt.count_rows(),
+        batch=apply_batch,
+        done=reached_version(vt.latest_version()),
+    )
     out = VersionedTable(mv_path).read(spark)
     return out.select(
         "bucket",

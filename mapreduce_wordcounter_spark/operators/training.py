@@ -57,9 +57,6 @@ extension surface (SURVEY.md §2.2, training-data pipeline tier).
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -73,7 +70,7 @@ from mapreduce_wordcounter_spark.functions.portable import (
 )
 from mapreduce_wordcounter_spark.registry import query
 from mapreduce_wordcounter_spark.session import derived
-from mapreduce_wordcounter_spark.tables import load_table, read_parquet, table_rows
+from mapreduce_wordcounter_spark.tables import load_table, table_rows
 
 _K = 5  # gradient-descent steps
 _LR = 12.0  # learning rate (fast-sigmoid gradients are ~4x flatter)
@@ -556,16 +553,12 @@ def stream_lr_keep_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream restart with new literals (or a broadcast-join against a
     model table — same plan either way)."""
     from mapreduce_wordcounter_spark.streaming.windows import (
-        stream_shuffle_partitions,
+        documents_stream,
+        drain,
     )
 
     w, tau = _train(spark, sf_dir)
-    schema = read_parquet(spark, os.path.join(sf_dir, "documents.parquet")).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = documents_stream(spark, sf_dir)
     feats = raw.select(
         "lang", "n_chars", F.size(words()).alias("wc")
     ).select("lang", *[F.expr(e).alias(c) for c, e in _FEAT_EXPRS.items()])
@@ -576,20 +569,7 @@ def stream_lr_keep_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = scored.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("kept").alias("n_kept")
     )
-    name = "stream_lr_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(agg, table_rows(spark, sf_dir, "documents"), "complete")
 
 
 @query(

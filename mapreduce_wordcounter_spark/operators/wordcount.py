@@ -641,11 +641,9 @@ def stream_pyds_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     the multi-batch offset-log path stays exercised with two batches
     here and by the offset-replay/exactly-once tests on the simple
     reader). The state width follows the 200 streamed docs
-    (stream_shuffle_partitions): one partition."""
-    import time
-    import uuid
-
+    (streaming.windows.drain): one partition."""
     from mapreduce_wordcounter_spark.sources.pydatasource import register
+    from mapreduce_wordcounter_spark.streaming.windows import drain
 
     register(spark)  # idempotent (session-local flag)
     n_docs = 200
@@ -666,41 +664,16 @@ def stream_pyds_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
-    name = "pyds_stream_" + uuid.uuid4().hex[:8]
-    from mapreduce_wordcounter_spark.session import scratch_dir
-    from mapreduce_wordcounter_spark.streaming.windows import (
-        stream_shuffle_partitions,
-    )
 
-    ckpt = scratch_dir("pyds_stream_ck_")
-    with stream_shuffle_partitions(spark, n_docs):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt + "/q")
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            # Drain on the query's own progress events (no Spark job
-            # per poll — the old per-poll aggregate both cost a job
-            # and raced the next batch for scheduler slots): done when
-            # committed batches account for all n_docs source docs.
-            deadline = time.monotonic() + 120
-            got = 0
-            while time.monotonic() < deadline:
-                got = sum(
-                    p["sources"][0]["numInputRows"] for p in q.recentProgress
-                )
-                if got >= n_docs:
-                    break
-                time.sleep(0.02)
-            else:
-                raise TimeoutError(f"stream drained only {got}/{n_docs} docs")
-        finally:
-            q.stop()
-    return spark.table(name)
+    def done(q) -> bool:
+        # Drain on the query's own progress events (no Spark job per
+        # poll — a per-poll aggregate both costs a job and races the
+        # next batch for scheduler slots): done when committed batches
+        # account for all n_docs source docs.
+        got = sum(p["sources"][0]["numInputRows"] for p in q.recentProgress)
+        return got >= n_docs
+
+    return drain(agg, n_docs, "complete", done=done)
 
 
 @query(
@@ -778,10 +751,9 @@ def stream_pyds_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each micro-batch writes task-parallel part files and a
     bounded per-batch manifest; the read-back is a plain parallel
-    JSON scan. The drain is availableNow-style: the source's offset
-    log is finite (200 docs), so the query stops at the last batch."""
+    JSON scan. The drain polls the committed manifests until they hold
+    all 200 docs (the source's offset log is finite), then stops."""
     import os
-    import time
 
     from mapreduce_wordcounter_spark.session import derived, scratch_dir
     from mapreduce_wordcounter_spark.sources.pydatasource import (
@@ -790,6 +762,7 @@ def stream_pyds_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         register,
         register_sink,
     )
+    from mapreduce_wordcounter_spark.streaming.windows import drain
 
     def build():
         register(spark)       # both idempotent
@@ -803,28 +776,16 @@ def stream_pyds_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("words_per_doc", 20)
             .load()
         )
-        q = (
-            docs.writeStream.outputMode("append")
-            .format("jsonl_manifest")
-            .option("path", path)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(processingTime="0 seconds")
-            .start()
+        # Drained once the COMMITTED total (per-batch manifests)
+        # reaches the corpus size — counting raw part files would also
+        # count uncommitted/superseded attempts.
+        drain(
+            docs,
+            None,
+            sink=("jsonl_manifest", path),
+            checkpoint=os.path.join(base, "ckpt"),
+            done=lambda q: manifest_total_rows(path) == 200,
         )
-        try:
-            # Drain until the COMMITTED total (per-batch manifests)
-            # reaches the corpus size — counting raw part files would
-            # also count uncommitted/superseded attempts.
-            deadline = time.monotonic() + 120
-            while time.monotonic() < deadline:
-                n = manifest_total_rows(path)
-                if n == 200:
-                    break
-                time.sleep(0.5)
-            else:
-                raise TimeoutError(f"stream sink committed only {n}/200 docs")
-        finally:
-            q.stop()
         return path
 
     # The source synthesizes its own corpus, so the sink is one per

@@ -19,17 +19,12 @@ main.go:106-110) — this is north-star extension surface.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from mapreduce_wordcounter_spark.registry import query
-from mapreduce_wordcounter_spark.streaming.windows import (
-    events_stream,
-    stream_shuffle_partitions,
-)
+from mapreduce_wordcounter_spark.streaming.windows import drain, events_stream
 from mapreduce_wordcounter_spark.tables import table_rows
 
 _OUT_SCHEMA = "user_id bigint, n_events bigint"
@@ -82,26 +77,10 @@ def stream_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — streaming-batch equivalence as the correctness contract
     (multi-batch state progression is pinned in tests/test_streaming.py)."""
     out = user_running_counts(events_stream(spark, sf_dir))
-    name = "stream_stateful_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    live = drain(out, table_rows(spark, sf_dir, "events"), "update")
     # Update mode appends one row per key per micro-batch; the running
     # count is monotone, so max = final.
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"))
-    )
+    return live.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
 
 
 def user_profile_tws(stream: DataFrame) -> DataFrame:
@@ -181,33 +160,16 @@ def stream_tws_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries keep the session default)."""
     prior = spark.conf.get(_PROVIDER_KEY, None)
     spark.conf.set(_PROVIDER_KEY, _ROCKSDB)
-    name = "stream_tws_" + uuid.uuid4().hex[:8]
     try:
         out = user_profile_tws(events_stream(spark, sf_dir))
-        with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
-            q = (
-                out.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-            finally:
-                q.stop()
+        live = drain(out, table_rows(spark, sf_dir, "events"), "update")
     finally:
         if prior is None:
             spark.conf.unset(_PROVIDER_KEY)
         else:
             spark.conf.set(_PROVIDER_KEY, prior)
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("n_types").alias("n_types"),
-        )
+    return live.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"), F.max("n_types").alias("n_types")
     )
 
 
@@ -293,26 +255,9 @@ def stream_apws_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by user_id in the state store; emission is one row per
     active key per micro-batch (update mode)."""
     out = user_profile_apws(events_stream(spark, sf_dir))
-    name = "stream_apws_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("n_types").alias("n_types"),
-        )
+    live = drain(out, table_rows(spark, sf_dir, "events"), "update")
+    return live.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"), F.max("n_types").alias("n_types")
     )
 
 
@@ -368,21 +313,5 @@ def stream_stateful_max_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual high-watermark changes, not stream length — the property
     that makes the change stream cheap to sink."""
     out = user_max_cdc(events_stream(spark, sf_dir))
-    name = "stream_maxcdc_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(F.max("cur_max").alias("max_value"))
-    )
+    live = drain(out, table_rows(spark, sf_dir, "events"), "update")
+    return live.groupBy("user_id").agg(F.max("cur_max").alias("max_value"))

@@ -13,6 +13,10 @@ main.go:106-110) — streaming is north-star extension surface. Strategy
    exercises watermarks and dropDuplicatesWithinWatermark, the pieces
    whose semantics are only observable across multiple micro-batches).
 
+Every streaming query in the package runs through ``drain`` below:
+sink, state width, checkpoint, trigger and the wait live there once.
+``events_stream`` and ``documents_stream`` are the two file sources.
+
 Scale posture: windowed streaming aggs shuffle on (window, key) with
 state bounded by watermark retention; session windows use Spark's
 native session_window merge. The file source here stands in for
@@ -22,12 +26,11 @@ Kafka — swap ``readStream.format`` and the plan is unchanged.
 from __future__ import annotations
 
 import os
+import time
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from mapreduce_wordcounter_spark.functions.numeric import dsum, sql_dsum
 from mapreduce_wordcounter_spark.functions.portable import (
@@ -36,11 +39,12 @@ from mapreduce_wordcounter_spark.functions.portable import (
     sql_split_words,
 )
 from mapreduce_wordcounter_spark.registry import query
-from mapreduce_wordcounter_spark.session import ensure_utc
+from mapreduce_wordcounter_spark.session import ensure_utc, scratch_dir
 from mapreduce_wordcounter_spark.tables import (
     events_ts,
     load_table,
     read_events_raw,
+    read_parquet,
     table_rows,
     task_width,
 )
@@ -60,39 +64,92 @@ _DFMT = "%Y-%m-%d %H:%M:%S"
 ROWS_PER_STATE_TASK = 12_500
 
 
-@contextmanager
-def stream_shuffle_partitions(spark: SparkSession, rows: int):
-    """Scope spark.sql.shuffle.partitions to a streaming drain over
-    ``rows`` input rows (width: ROWS_PER_STATE_TASK above); each drain
-    starts a fresh query + checkpoint, so the partition count is free
-    to differ from the batch default and is restored after.
+# A polled drain not done after this long raises TimeoutError: a
+# partial drain is never served.
+DRAIN_TIMEOUT_S = 120.0
 
-    Also scopes the DEFAULT checkpoint base to session scratch so the
-    throwaway availableNow WALs are cleaned at exit. They stay on disk:
-    a drain's checkpoint is a few KB the page cache absorbs, and a
-    /dev/shm WAL measured flat against it."""
-    from mapreduce_wordcounter_spark.session import scratch_dir
 
-    width = task_width(spark, rows, ROWS_PER_STATE_TASK)
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    prior_ckpt = spark.conf.get(
-        "spark.sql.streaming.checkpointLocation", None
+def drain(
+    stream: DataFrame,
+    rows: int | None,
+    mode: str = "append",
+    *,
+    batch=None,
+    sink: tuple[str, str] | None = None,
+    checkpoint: str | None = None,
+    done=None,
+) -> DataFrame | None:
+    """Run ``stream`` to the end of its input and stop it: the one
+    place the package starts, waits on and stops a streaming query.
+
+    - Sink: a memory table under a fresh ``drain_<uuid8>`` name,
+      returned as ``spark.table(name)``; with ``batch``, the
+      ``foreachBatch(batch)`` callback, and with ``sink``, the
+      ``(format, path)`` streaming writer; both of those return None.
+    - State width: with ``rows`` (the streamed input rows),
+      ``spark.sql.shuffle.partitions`` is
+      ``task_width(rows, ROWS_PER_STATE_TASK)`` for the run and
+      restored after. Each drain starts a fresh checkpoint, so the
+      width is free to differ from the batch default. ``rows=None``
+      runs at the session width.
+    - Checkpoint: the writer's ``checkpointLocation`` option, the
+      caller's path or else a fresh session scratch dir (removed at
+      exit; a /dev/shm checkpoint measured flat against disk). The
+      session conf is never touched.
+    - Trigger: with no ``done``, availableNow and wait for the query to
+      end. Python stream sources fall back to a single batch under
+      availableNow, so they pass ``done(q)``: the drain runs a
+      ``processingTime="0 seconds"`` trigger and polls ``done(q)``
+      every 0.02 s. A query that stops first re-raises its error; one
+      not done after DRAIN_TIMEOUT_S raises TimeoutError."""
+    spark = stream.sparkSession
+    w = stream.writeStream.outputMode(mode).option(
+        "checkpointLocation", checkpoint or scratch_dir("drain_ck_")
     )
+    name = None
+    if batch is not None:
+        w = w.foreachBatch(batch)
+    elif sink is not None:
+        w = w.format(sink[0]).option("path", sink[1])
+    else:
+        name = "drain_" + uuid.uuid4().hex[:8]
+        w = w.format("memory").queryName(name)
+    if done is None:
+        w = w.trigger(availableNow=True)
+    else:
+        w = w.trigger(processingTime="0 seconds")
+
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    if rows is not None:
+        spark.conf.set(key, str(task_width(spark, rows, ROWS_PER_STATE_TASK)))
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
-        spark.conf.set(
-            "spark.sql.streaming.checkpointLocation",
-            scratch_dir("drain_ck_"),
-        )
-        yield
+        q = w.start()
+        try:
+            if done is None:
+                q.awaitTermination()
+            else:
+                deadline = time.monotonic() + DRAIN_TIMEOUT_S
+                while True:
+                    active = q.isActive  # read before done(q): no race
+                    if done(q):
+                        break
+                    if not active:
+                        raise q.exception() or RuntimeError(
+                            f"stream {name or q.id} stopped before it drained"
+                        )
+                    if time.monotonic() > deadline:
+                        raise TimeoutError(
+                            f"stream {name or q.id} did not drain within "
+                            f"{DRAIN_TIMEOUT_S:.0f}s"
+                        )
+                    time.sleep(0.02)
+        finally:
+            q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-        if prior_ckpt is None:
-            spark.conf.unset("spark.sql.streaming.checkpointLocation")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.checkpointLocation", prior_ckpt
-            )
+        if rows is not None:
+            spark.conf.set(key, prior)
+    return None if name is None else spark.table(name)
 
 
 @query(
@@ -245,6 +302,17 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events_ts(raw)
 
 
+def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents as an unbounded stream: parquet file source with the
+    batch read's schema (tables.read_parquet), as events_stream."""
+    schema = read_parquet(spark, os.path.join(sf_dir, "documents.parquet")).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "documents.parquet")
+        .parquet(sf_dir)
+    )
+
+
 @query(
     "stream_tumbling_live",
     oracle=f"""
@@ -272,20 +340,7 @@ def stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = "stream_tumbling_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(agg, table_rows(spark, sf_dir, "events"), "complete")
 
 
 @query(
@@ -328,20 +383,7 @@ def stream_ohlc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = "stream_ohlc_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(agg, table_rows(spark, sf_dir, "events"), "complete")
 
 
 @query(
@@ -374,20 +416,7 @@ def stream_sliding_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = "stream_sliding_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(agg, table_rows(spark, sf_dir, "events"), "complete")
 
 
 @query(
@@ -435,20 +464,7 @@ def stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = "stream_session_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(agg, table_rows(spark, sf_dir, "events"), "complete")
 
 
 @query(
@@ -512,20 +528,7 @@ def stream_click_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             "delay_s"
         ),
     )
-    name = "stream_cj_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(joined, table_rows(spark, sf_dir, "events"))
 
 
 @query(
@@ -614,20 +617,7 @@ def stream_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFram
             "delay_s"
         ),
     )
-    name = "stream_oj_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(joined, table_rows(spark, sf_dir, "events"))
 
 
 def foreach_batch_upsert(
@@ -640,7 +630,7 @@ def foreach_batch_upsert(
     """Drain an update-mode streaming aggregate through ``foreachBatch``
     into a parquet upsert target, and return the target's latest state.
     ``rows`` is the size of the streamed input (it sets the state
-    width, see stream_shuffle_partitions).
+    width, see drain).
 
     The canonical custom-sink pattern for sinks with no native streaming
     writer (JDBC, key-value stores, MERGE targets): update mode emits
@@ -662,18 +652,7 @@ def foreach_batch_upsert(
             .parquet(target_dir)
         )
 
-    with stream_shuffle_partitions(spark, rows):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", target_dir + "_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    drain(agg, rows, "update", batch=write_batch, checkpoint=target_dir + "_ckpt")
 
     # Zero micro-batches (empty source) → the callback never ran and the
     # target path doesn't exist; the sink's state is legitimately empty.
@@ -709,8 +688,6 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (same oracle as ev_tumbling_hourly). Multi-epoch upsert
     behavior (later batches overwriting earlier keys) is pinned in
     tests/test_streaming.py over a multi-file source."""
-    from mapreduce_wordcounter_spark.session import scratch_dir
-
     agg = (
         events_stream(spark, sf_dir)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -726,17 +703,6 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return foreach_batch_upsert(
         spark, agg, target, table_rows(spark, sf_dir, "events")
     )
-
-
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
 
 
 @query(
@@ -770,11 +736,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = spark.table(write_base_snapshot(spark, sf_dir)).withColumn(
         "seen", F.lit(1)
     )
-    docs = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = documents_stream(spark, sf_dir)
     increment = docs.filter(F.col("doc_id") % 3 == 0).select(
         "doc_id", F.sha2("text", 256).alias("content_hash")
     )
@@ -783,20 +745,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("seen").isNull())
         .select("doc_id", "content_hash")
     )
-    name = "stream_incr_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
-        q = (
-            new_docs.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(new_docs, table_rows(spark, sf_dir, "documents"))
 
 
 @query(
@@ -819,31 +768,14 @@ def stream_wc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     production scale this is update mode + a foreachBatch MERGE — see
     stream_foreach_batch_upsert for exactly that sink)."""
     ensure_utc(spark)
-    docs = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = documents_stream(spark, sf_dir)
     counts = (
         docs.select(F.explode(split_words()).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
-    name = "stream_wc_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
-        q = (
-            counts.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(counts, table_rows(spark, sf_dir, "documents"), "complete")
 
 
 @query(
@@ -868,11 +800,7 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    docs = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = documents_stream(spark, sf_dir)
     # Spread the DOC stream (not the exploded tokens) before the
     # x_CMS_D md5 fan-out: the file stream source plans one task per
     # input split, so the hash work (the drain's dominant CPU) is
@@ -901,20 +829,7 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("j", "bucket")
         .agg(F.count("*").alias("bucket_count"))
     )
-    name = "stream_cms_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
-        q = (
-            sk_stream.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    sk = spark.table(name)
+    sk = drain(sk_stream, table_rows(spark, sf_dir, "documents"), "complete")
     # Batch audit side (exact top-k words + their sketch buckets).
     # Probe-side bucket hashes are computed AFTER the top-k cut: the
     # former order fanned out + md5-hashed the WHOLE vocabulary and
@@ -976,11 +891,7 @@ def stream_pii_redacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    docs = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = documents_stream(spark, sf_dir)
     aug = pii_aug_of(docs)
     redacted = F.regexp_replace(
         F.regexp_replace(
@@ -1002,20 +913,7 @@ def stream_pii_redacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("aug").cast("long").alias("len_before"),
         F.length(redacted).cast("long").alias("len_after"),
     )
-    name = "stream_pii_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
-        q = (
-            stats.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(stats, table_rows(spark, sf_dir, "documents"))
 
 
 def _share_pii_oracle() -> None:
@@ -1045,14 +943,8 @@ def stream_quality_score_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the third foreachBatch posture next to the epoch-stamped
     upsert (aggregates) and the stateless projection (PII scrub):
     per-row model application with a broadcast weight artifact."""
-    from mapreduce_wordcounter_spark.session import scratch_dir
-
     ensure_utc(spark)
-    docs = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = documents_stream(spark, sf_dir)
     target = scratch_dir("sqs_") + "/scores"
 
     def score_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1091,17 +983,12 @@ def stream_quality_score_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out.write.mode("append").parquet(target)
 
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
-        q = (
-            docs.writeStream.foreachBatch(score_batch)
-            .option("checkpointLocation", target + "_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    drain(
+        docs,
+        table_rows(spark, sf_dir, "documents"),
+        batch=score_batch,
+        checkpoint=target + "_ckpt",
+    )
     if not os.path.isdir(target):
         # Zero micro-batches: legitimately empty sink.
         return spark.createDataFrame(
@@ -1147,11 +1034,7 @@ def stream_dsir_lang_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_wordcounter_spark.operators.text import _dsir_word_weights
 
     weights = _dsir_word_weights(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = documents_stream(spark, sf_dir)
     tok = raw.select(
         "lang",
         F.explode(split_words()).alias("word"),
@@ -1164,20 +1047,7 @@ def stream_dsir_lang_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("lw").cast("long").alias("lw_micro_sum"),
         )
     )
-    name = "stream_dsir_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "documents")):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(agg, table_rows(spark, sf_dir, "documents"), "complete")
 
 
 def _share_dsir_oracle() -> None:
@@ -1258,20 +1128,7 @@ def stream_distinct_users_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("w.start", _FMT).alias("window_start"), "n_users"
         )
     )
-    name = "stream_distinct_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(agg, table_rows(spark, sf_dir, "events"), "complete")
 
 
 @query(
@@ -1310,17 +1167,4 @@ def stream_first_touch_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("first_type")
         )
     )
-    name = "stream_ftouch_" + uuid.uuid4().hex[:8]
-    with stream_shuffle_partitions(spark, table_rows(spark, sf_dir, "events")):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(agg, table_rows(spark, sf_dir, "events"), "complete")

@@ -827,10 +827,9 @@ def test_versioned_stream_rate_limit(spark, tmp_path):
 
 def _drain_cdf(spark, path, start_version, target_version, tmp_path, tag):
     """Start a readChangeFeed stream over (start_version, target] and
-    return its drained rows (memory sink, explicit trigger)."""
-    from mapreduce_wordcounter_spark.operators.lakehouse import (
-        _drain_versioned_stream,
-    )
+    return its drained rows (memory sink, polled to target_version)."""
+    from mapreduce_wordcounter_spark.operators.lakehouse import reached_version
+    from mapreduce_wordcounter_spark.streaming.windows import drain
 
     s = (
         spark.readStream.format("versioned_stream")
@@ -840,17 +839,12 @@ def _drain_cdf(spark, path, start_version, target_version, tmp_path, tag):
         .option("startingVersion", str(start_version))
         .load()
     )
-    q = (
-        s.writeStream.outputMode("append").format("memory")
-        .queryName(f"cdf_{tag}")
-        .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
-        .trigger(processingTime="0 seconds").start()
+    return drain(
+        s,
+        None,
+        checkpoint=str(tmp_path / f"ck_{tag}"),
+        done=reached_version(target_version),
     )
-    try:
-        _drain_versioned_stream(q, target_version)
-    finally:
-        q.stop()
-    return spark.table(f"cdf_{tag}")
 
 
 def test_cdf_stream_matches_batch_feed_per_commit(spark, tmp_path):

@@ -14,10 +14,12 @@ Two layers:
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import time
 import uuid
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,6 +32,7 @@ from mapreduce_wordcounter_spark.streaming.windows import events_stream
 from tests.conftest import SF_ORACLE
 
 _QUERIES = all_queries()
+_PKG = Path(__file__).resolve().parent.parent / "mapreduce_wordcounter_spark"
 
 _EVENT_SCHEMA = T.StructType(
     [
@@ -184,12 +187,11 @@ def test_state_width_follows_input_rows(spark):
 
 
 @pytest.mark.parametrize("prior_ckpt", [None, "ckpt_base"])
-def test_stream_shuffle_partitions_restores_conf(spark, tmp_path, prior_ckpt):
-    """The drain scope sets the state width and a scratch checkpoint
-    base, and puts both confs back on exit, also when the body raises."""
-    from mapreduce_wordcounter_spark.streaming.windows import (
-        stream_shuffle_partitions,
-    )
+def test_drain_restores_conf(spark, tmp_path, prior_ckpt):
+    """A drain runs at its state width and puts the session width back
+    after, also when the query fails. Its checkpoint is the writer's
+    option: the session checkpoint conf stays as it was, unset or set."""
+    from mapreduce_wordcounter_spark.streaming.windows import drain
 
     sp, ck = "spark.sql.shuffle.partitions", "spark.sql.streaming.checkpointLocation"
     if prior_ckpt is not None:
@@ -197,30 +199,83 @@ def test_stream_shuffle_partitions_restores_conf(spark, tmp_path, prior_ckpt):
         spark.conf.set(ck, prior_ckpt)
     prior_sp = spark.conf.get(sp)
     p = spark.sparkContext.defaultParallelism
+    src = _write_batches(spark, tmp_path, [[_ev(1, "2024-01-01 10:00:00")]])
+    seen = []
+
+    def record(df, epoch_id):
+        seen.append((spark.conf.get(sp), spark.conf.get(ck, None)))
+
+    def fail(df, epoch_id):
+        record(df, epoch_id)
+        raise RuntimeError("drain failed")
+
     try:
-        with stream_shuffle_partitions(spark, 1):
-            assert spark.conf.get(sp) == "1"
-            assert spark.conf.get(ck, None) not in (None, prior_ckpt)
+        own_ckpt = str(tmp_path / "own_ckpt")
+        drain(
+            _event_stream_from_json(spark, src), 1, batch=record, checkpoint=own_ckpt
+        )
+        assert seen == [("1", prior_ckpt)]
+        assert "commits" in os.listdir(own_ckpt)
         assert spark.conf.get(sp) == prior_sp
         assert spark.conf.get(ck, None) == prior_ckpt
 
-        with pytest.raises(RuntimeError, match="drain failed"):
-            with stream_shuffle_partitions(spark, 10**12):
-                assert spark.conf.get(sp) == str(p)
-                raise RuntimeError("drain failed")
+        with pytest.raises(Exception, match="drain failed"):
+            drain(_event_stream_from_json(spark, src), 10**12, batch=fail)
+        assert seen[-1] == (str(p), prior_ckpt)
         assert spark.conf.get(sp) == prior_sp
         assert spark.conf.get(ck, None) == prior_ckpt
     finally:
         spark.conf.unset(ck)
 
 
+def test_polled_drain_surfaces_query_failure(spark, tmp_path):
+    """A ``done=`` drain whose query dies raises the query's own error
+    at once instead of polling on to the timeout."""
+    from mapreduce_wordcounter_spark.streaming.windows import drain
+
+    src = _write_batches(spark, tmp_path, [[_ev(1, "2024-01-01 10:00:00")]])
+
+    def fail(df, epoch_id):
+        raise RuntimeError("micro-batch failed")
+
+    t0 = time.monotonic()
+    with pytest.raises(Exception, match="micro-batch failed") as err:
+        drain(
+            _event_stream_from_json(spark, src),
+            None,
+            batch=fail,
+            done=lambda q: False,
+        )
+    assert not isinstance(err.value, TimeoutError)
+    assert time.monotonic() - t0 < 30
+
+
 def test_stateful_result_independent_of_state_width(spark):
     """The same stateful drain at one state partition and at one per
     core: both equal the batch GROUP BY, so the width policy can only
-    move cost, never the result."""
-    from mapreduce_wordcounter_spark.streaming.windows import (
-        stream_shuffle_partitions,
-    )
+    move cost, never the result. The width is read from the query's
+    progress events."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from mapreduce_wordcounter_spark.streaming.windows import drain
+
+    widths, ended = [], threading.Semaphore(0)
+
+    class Widths(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            ops = event.progress.stateOperators
+            widths.append([op.numShufflePartitions for op in ops])
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            ended.release()
 
     batch = (
         spark.read.parquet(f"{SF_ORACLE}/events.parquet")
@@ -228,29 +283,48 @@ def test_stateful_result_independent_of_state_width(spark):
         .agg(F.count("*").alias("n_events"))
     )
     p = spark.sparkContext.defaultParallelism
-    for rows, width in ((1, 1), (10**12, p)):
-        name = "t_" + uuid.uuid4().hex[:8]
-        with stream_shuffle_partitions(spark, rows):
-            q = (
-                user_running_counts(events_stream(spark, SF_ORACLE))
-                .writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                state_ops = q.lastProgress["stateOperators"]
-            finally:
-                q.stop()
-        assert [op["numShufflePartitions"] for op in state_ops] == [width]
-        live = (
-            spark.table(name)
-            .groupBy("user_id")
-            .agg(F.max("n_events").alias("n_events"))
-        )
-        assert _canon(live).equals(_canon(batch))
+    listener = Widths()
+    spark.streams.addListener(listener)
+    try:
+        for rows, width in ((1, 1), (10**12, p)):
+            widths.clear()
+            out = user_running_counts(events_stream(spark, SF_ORACLE))
+            live = drain(out, rows, "update")
+            # listener events arrive in order: termination comes last
+            assert ended.acquire(timeout=60)
+            assert widths and all(w == [width] for w in widths), widths
+            live = live.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
+            assert _canon(live).equals(_canon(batch))
+    finally:
+        spark.streams.removeListener(listener)
+
+
+_STREAM_CALLS = ("writeStream", "trigger", "awaitTermination")
+
+
+def test_streams_run_only_through_drain():
+    """Only streaming.windows.drain starts, triggers or waits on a
+    streaming query, and no module names the session checkpoint conf:
+    checkpoints go on the writer. The scan must find drain's own calls."""
+    bad, in_drain = [], set()
+    for path in sorted(_PKG.rglob("*.py")):
+        text, rel = path.read_text(), path.relative_to(_PKG)
+        if "spark.sql.streaming.checkpointLocation" in text:
+            bad.append(f"{rel}: spark.sql.streaming.checkpointLocation")
+        tree = ast.parse(text)
+        own = set()
+        if rel == Path("streaming/windows.py"):
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name == "drain":
+                    own = {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr in _STREAM_CALLS:
+                if id(node) in own:
+                    in_drain.add(node.attr)
+                else:
+                    bad.append(f"{rel}:{node.lineno}: .{node.attr}")
+    assert in_drain == set(_STREAM_CALLS)
+    assert not bad, bad
 
 
 # ---------------------------------------------------------------------------
