@@ -100,14 +100,15 @@ def main(argv: Sequence[str] | None = None, spark: SparkSession | None = None) -
     print(f"{'-----':<10}----")
     if args.top > 0:
         # Two actions (top-N rows + vocabulary total) over one cached
-        # aggregate instead of recomputing the pipeline per action.
-        from mapreduce_wordcounter_spark.session import pin, release_pinned
-
-        pin(counts)
-        for r in ordered.limit(args.top).collect():
-            print(f"{r['cnt']:<10}{r['word']}")
-        total = counts.count()
-        release_pinned()
+        # aggregate instead of recomputing the pipeline per action. Only
+        # this aggregate is released: a caller's session keeps its caches.
+        counts.persist()
+        try:
+            for r in ordered.limit(args.top).collect():
+                print(f"{r['cnt']:<10}{r['word']}")
+            total = counts.count()
+        finally:
+            counts.unpersist()
     else:
         # Full-table print: stream partition-by-partition (global order
         # is preserved — the sort range-partitions) and derive the total

@@ -30,7 +30,7 @@ from mapreduce_wordcounter_spark.operators.dedup import (
     _DUCK_PARAGRAPHS,
     paragraph_relation,
 )
-from mapreduce_wordcounter_spark.operators.wordcount import tokens
+from mapreduce_wordcounter_spark.operators.wordcount import postings, tokens
 from mapreduce_wordcounter_spark.registry import ORACLE, query
 from mapreduce_wordcounter_spark.tables import load_table
 
@@ -144,21 +144,13 @@ def _register_ngrams() -> None:
 def tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF: term frequency × ln(N/df).
 
-    Single token-stream pass: df is derived from the tf relation
-    (tf has exactly one row per (doc, word), so df = count(*) per word)
-    instead of re-exploding the corpus; N comes from a metadata-only
-    count over documents, broadcast as a scalar. Plan: one explode
-    scan → tf agg → broadcast-joined with the vocabulary-sized df.
-
-    tf is persisted because it feeds two consumers (the join probe and
-    the df derivation) — without it Spark re-scans and re-explodes the
-    corpus per consumer, same pattern as dedup's shingle persist.
-    Cached through session.pin → released by session.release_pinned."""
-    from mapreduce_wordcounter_spark.session import pin
-
-    tf = pin(
-        tokens(spark, sf_dir).groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
-    )
+    tf is the at-rest postings relation (wordcount.postings: one row
+    per (doc, word), tokenized once per corpus), so df = count(*) per
+    word over it; N comes from a metadata-only count over documents,
+    broadcast as a scalar. Plan: postings scan → broadcast-joined with
+    the vocabulary-sized df aggregate of a second postings scan — no
+    explode anywhere."""
+    tf = postings(spark, sf_dir).select("doc_id", "word", "tf")
     df = tf.groupBy("word").agg(F.count("*").alias("df"))
     n = load_table(spark, sf_dir, "documents").agg(
         F.count("*").cast("double").alias("n_docs")

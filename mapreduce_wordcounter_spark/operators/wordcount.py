@@ -7,24 +7,32 @@ main.go:141-144), lowercased (main.go:148), empty tokens dropped
 (main.go:149); the result relation is (word, cnt) and the program's
 scalar output is the distinct vocabulary size (main.go:73).
 
-Spark-first mapping (SURVEY.md §2.3): ``explode(split_words())`` →
-``filter(word <> '')`` → ``groupBy(word).count()``, with the tokenizer
-and its DuckDB twin defined once in ``functions/portable.py``.
-The map-side partial aggregate / shuffle / final merge the reference
-hand-builds (main.go:84-111) are Catalyst's partial+final
-HashAggregateExec — free, lock-free, and hash-partitioned (strictly
-better than the reference's single mutex-guarded map, main.go:191-193).
+Spark-first mapping (SURVEY.md §2.3): tokenize once into postings →
+per-query partial/final agg. The map half — ``explode(split_words())``
+→ ``filter(word <> '')`` → per-(doc, word) ``count`` — is the
+reference's per-file partial map (main.go:115-171); it runs once per
+corpus and is kept at rest in the index catalog as the ``(doc_id,
+lang, source, word, tf)`` relation :func:`postings`. Each query then
+runs only the reduce half (main.go:185-197) over postings: Catalyst's
+partial+final HashAggregateExec — lock-free and hash-partitioned
+(strictly better than the reference's single mutex-guarded map,
+main.go:191-193). The tokenizer and its DuckDB twin are defined once
+in ``functions/portable.py``; every oracle replays it over the raw
+``documents`` text, so parity checks the index contents too.
 
-Scale posture (100 TB): the whole family is scan → generate → partial
-agg → exchange on `word` → final agg. Vocabulary is sublinear in corpus
-size (Heaps' law), so the shuffle carries only the per-partition
-partial (word, cnt) pairs, not the token stream; the only skew risk is
-Zipfian hot words, which the partial aggregate absorbs before the
-exchange. For vocabulary cardinality at scale prefer
-``approx_count_distinct`` (registered as wc_vocab_approx, rows-only).
+Scale posture (100 TB): per query, scan postings → partial agg →
+exchange on `word` → final agg. Postings hold one row per (doc,
+distinct word), so they are never larger than the token stream, and
+the shuffle carries only per-partition partial (word, cnt) pairs;
+vocabulary is sublinear in corpus size (Heaps' law), and Zipfian hot
+words are absorbed by the partial aggregate before the exchange. For
+vocabulary cardinality at scale prefer ``approx_count_distinct``
+(registered as wc_vocab_approx).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,14 +44,17 @@ from mapreduce_wordcounter_spark.functions.portable import (
     sql_split_words,
 )
 from mapreduce_wordcounter_spark.registry import query
+from mapreduce_wordcounter_spark.sources import index_catalog as ic
 from mapreduce_wordcounter_spark.tables import load_table
 
 
 def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → one row per token: (doc_id, lang, source, word).
 
-    The shared front half of every query in this family; Catalyst prunes
-    unused columns per consumer.
+    The map half the family shares: :func:`postings` is built from it
+    once per corpus, and the queries that need the raw token stream
+    (the sketch and estimator queries) read it directly; Catalyst
+    prunes unused columns per consumer.
     """
     docs = load_table(spark, sf_dir, "documents")
     return (
@@ -55,6 +66,36 @@ def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("word") != "")
     )
+
+
+def postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → one row per (doc, distinct word): (doc_id, lang,
+    source, word, tf), where tf counts the word's tokens in the doc.
+
+    The at-rest map output of the family: built from :func:`tokens` on
+    first use and published in the index catalog, keyed by the
+    documents fingerprint, so it is built once per corpus and rebuilt
+    when the corpus changes (sources/index_catalog.py). Queries run
+    only the reduce half over it: ``sum(tf)`` is a token count, and
+    ``count(*)`` per word is its document frequency (``doc_id`` is the
+    documents key)."""
+
+    def build(data: str) -> None:
+        (
+            tokens(spark, sf_dir)
+            .groupBy("doc_id", "lang", "source", "word")
+            .agg(F.count("*").alias("tf"))
+            .write.parquet(os.path.join(data, "postings"))
+        )
+
+    return ic.table_index(
+        spark,
+        "wc_postings",
+        [os.path.join(sf_dir, "documents.parquet")],
+        None,
+        build,
+        ["postings"],
+    )["postings"]
 
 
 @query(
@@ -70,7 +111,7 @@ def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def wc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's materialized intermediate: word → count
     (main.go:84-111, O4-O9)."""
-    return tokens(spark, sf_dir).groupBy("word").agg(F.count("*").alias("cnt"))
+    return postings(spark, sf_dir).groupBy("word").agg(F.sum("tf").alias("cnt"))
 
 
 @query(
@@ -85,7 +126,7 @@ def wc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def wc_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's actual printed output: distinct vocabulary size
     (len(finalResult), main.go:73, O11)."""
-    return tokens(spark, sf_dir).agg(F.countDistinct("word").alias("vocab_size"))
+    return postings(spark, sf_dir).agg(F.countDistinct("word").alias("vocab_size"))
 
 
 @query(
@@ -98,9 +139,10 @@ def wc_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def wc_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Total token count + distinct vocabulary in one pass."""
-    return tokens(spark, sf_dir).agg(
-        F.count("*").alias("total_tokens"),
+    """Total token count + distinct vocabulary in one pass. An empty
+    corpus has no postings, so the token sum is coalesced to 0."""
+    return postings(spark, sf_dir).agg(
+        F.coalesce(F.sum("tf"), F.lit(0)).alias("total_tokens"),
         F.countDistinct("word").alias("vocab_size"),
     )
 
@@ -122,9 +164,9 @@ def wc_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-broken on word so the LIMIT frontier is deterministic across
     engines. Physically a TakeOrderedAndProject — no global sort."""
     return (
-        tokens(spark, sf_dir)
+        postings(spark, sf_dir)
         .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
+        .agg(F.sum("tf").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("word"))
         .limit(100)
     )
@@ -144,9 +186,9 @@ def wc_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source counts — the reference's per-file partial maps
     (main.go:126) promoted to a first-class grouping column."""
     return (
-        tokens(spark, sf_dir)
+        postings(spark, sf_dir)
         .groupBy("source", "word")
-        .agg(F.count("*").alias("cnt"))
+        .agg(F.sum("tf").alias("cnt"))
     )
 
 
@@ -161,11 +203,12 @@ def wc_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def wc_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document frequency: in how many documents does each word occur."""
+    """Document frequency: in how many documents does each word occur.
+    A posting is one (doc, word) pair, so this is a plain count."""
     return (
-        tokens(spark, sf_dir)
+        postings(spark, sf_dir)
         .groupBy("word")
-        .agg(F.countDistinct("doc_id").alias("df"))
+        .agg(F.count("*").alias("df"))
     )
 
 
@@ -182,7 +225,7 @@ def wc_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
 def wc_vocab_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct vocabulary per language."""
     return (
-        tokens(spark, sf_dir)
+        postings(spark, sf_dir)
         .groupBy("lang")
         .agg(F.countDistinct("word").alias("vocab_size"))
     )
@@ -385,12 +428,13 @@ def wc_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The pinned plan carries a marker literal: canonicalization erases
     # alias names, so a bare tokens().groupBy(word).count() aggregate is
-    # sameResult-identical to wc_counts' — the shared CacheManager would
-    # silently substitute this cache into wc_counts' executed plan in
-    # any session where this query built first (extra InMemoryRelation
-    # exchange; r12 red suite). The Project(word, n, 1) root cannot
-    # match any served query's subtree; consumers below simply never
-    # reference the marker.
+    # sameResult-identical to the word counts other token-stream queries
+    # build (text.zipf_slope's) — the shared CacheManager would silently
+    # substitute this cache into their executed plans in any session
+    # where this query built first (extra InMemoryRelation exchange;
+    # r12 red suite). The Project(word, n, 1) root cannot match any
+    # served query's subtree; consumers below simply never reference
+    # the marker.
     wc = pin(
         tokens(spark, sf_dir)
         .groupBy("word")

@@ -52,6 +52,25 @@ def test_cli_top_n(spark, golden_corpus, capsys):
     assert "Total words: 3" in out  # the scalar still covers the full vocab
 
 
+def test_cli_top_n_keeps_callers_caches(spark, golden_corpus, capsys):
+    """--top releases only its own aggregate: a frame the caller pinned
+    in the same session stays cached and registered."""
+    from pyspark import StorageLevel
+
+    from mapreduce_wordcounter_spark.session import _PINNED_DFS, pin
+
+    mine = pin(spark.range(7).withColumnRenamed("id", "cli_keep"))
+    mine.count()
+    try:
+        assert main([golden_corpus[0], "--top", "1"], spark=spark) == 0
+        capsys.readouterr()
+        assert mine.storageLevel != StorageLevel.NONE
+        assert any(df is mine for df in _PINNED_DFS)
+    finally:
+        mine.unpersist()
+        _PINNED_DFS[:] = [df for df in _PINNED_DFS if df is not mine]
+
+
 def test_cli_no_files_errors(capsys):
     # Reference: empty argv is an error, not an empty result (main.go:61-64).
     rc = main([])

@@ -1,8 +1,8 @@
 """Parquet schemas are inferred once per session (tables.read_parquet):
-a repeat base-table load or versioned-snapshot read builds without a
-footer-read Spark job, a table replaced under the same path is
-inferred again, and the chokepoint modules read parquet only through
-the helper."""
+a repeat base-table load, versioned-snapshot read or index-catalog
+read builds without a footer-read Spark job, a table replaced under
+the same path is inferred again, and the chokepoint modules read
+parquet only through the helper."""
 
 from __future__ import annotations
 
@@ -115,6 +115,15 @@ def test_serve_query_rebuild_runs_no_job(spark, name):
     assert _jobs_to_build(spark, lambda: fn(spark, SF_SMOKE)) == 0
 
 
+def test_index_query_rebuild_runs_no_job(spark):
+    """An index-backed query's second build reads the published index
+    with its stored schema: no footer-read job (index_catalog reads
+    through read_parquet)."""
+    fn = all_queries()["search_phrase_positional"]
+    fn(spark, SF_SMOKE).collect()
+    assert _jobs_to_build(spark, lambda: fn(spark, SF_SMOKE)) == 0
+
+
 def _parquet_reads(tree: ast.AST):
     """``.parquet(...)`` calls that are not on a writer chain
     (``df.write...``): reads, including through a reader variable."""
@@ -138,12 +147,12 @@ def _parquet_reads(tree: ast.AST):
 
 
 def test_parquet_reads_go_through_read_parquet():
-    """tables.py and sources/versioned.py read parquet only through
-    read_parquet, so no build re-infers a schema the session holds.
-    The scan must find read_parquet's own two reads, and passes over
-    versioned.py's writes."""
+    """tables.py, sources/versioned.py and sources/index_catalog.py
+    read parquet only through read_parquet, so no build re-infers a
+    schema the session holds. The scan must find read_parquet's own
+    two reads, and passes over versioned.py's writes."""
     bad, n_allowed = [], 0
-    for rel in ("tables.py", "sources/versioned.py"):
+    for rel in ("tables.py", "sources/versioned.py", "sources/index_catalog.py"):
         tree = ast.parse((_PKG / rel).read_text())
         allowed = {
             id(n)
